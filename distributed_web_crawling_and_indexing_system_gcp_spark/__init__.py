@@ -21,4 +21,14 @@ Everything is DataFrame-first: no RDDs, no per-row Python UDFs; Python
 logic runs only inside Arrow-batched pandas UDFs / applyInPandas.
 """
 
+import sys as _sys
+
 __version__ = "0.1.0"
+
+# Inside a PySpark worker (imported there to run one of this package's
+# UDFs), stop every later task of the reused worker from re-reading the
+# unchanged pyspark.zip directory; see _zip_cache.  The driver is left as is.
+if "pyspark.worker" in _sys.modules:
+    from ._zip_cache import install as _install_zip_cache
+
+    _install_zip_cache()

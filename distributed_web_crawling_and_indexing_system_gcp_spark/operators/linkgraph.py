@@ -39,6 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def graph_nodes(edges: DataFrame) -> DataFrame:
@@ -153,14 +154,15 @@ def connected_components(
 def _cc_label_prop(
     edges: DataFrame, max_iterations: int
 ) -> tuple[DataFrame, bool]:
-    """Min-label propagation; returns (labels, converged).  Convergence is
-    an exact label-sum check: per-node labels are MONOTONICALLY
-    non-increasing under min-propagation, so Σ component is strictly
-    smaller after any change and equal iff the fixpoint is reached — one
-    scalar aggregate per round instead of the old labels⋈new_labels
-    changed-row join (same action count, one join and one shuffle less
-    per round; decimal sum so huge node-id sums can't overflow under
-    ANSI mode)."""
+    """Min-label propagation; returns (labels, converged).
+
+    Per-node labels are MONOTONICALLY non-increasing under
+    min-propagation, so the fixpoint is reached iff no label changed.  For
+    integral node ids that is an exact label-sum check: Σ component is
+    strictly smaller after any change — one scalar aggregate per round
+    instead of a labels⋈new_labels changed-row join (decimal sum so huge
+    node-id sums can't overflow under ANSI mode).  Other id types (URL
+    strings) have no sum: they look for one changed label with that join."""
     und = (
         edges.select("src", "dst")
         .unionByName(
@@ -174,12 +176,14 @@ def _cc_label_prop(
     labels = graph_nodes(und).withColumn("component", F.col("node"))
     labels = labels.localCheckpoint(eager=False)
 
+    integral = isinstance(labels.schema["node"].dataType, T.IntegralType)
+
     def _label_sum(df: DataFrame):
         return df.agg(
             F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
         ).collect()[0]["s"]
 
-    prev_sum = _label_sum(labels)
+    prev_sum = _label_sum(labels) if integral else None
     converged = False
     for _ in range(max_iterations):
         neigh = und.join(labels, und["src"] == labels["node"]).select(
@@ -191,12 +195,19 @@ def _cc_label_prop(
             .agg(F.min("component").alias("component"))
             .localCheckpoint(eager=False)
         )
-        new_sum = _label_sum(new_labels)
+        if integral:
+            new_sum = _label_sum(new_labels)
+            unchanged = new_sum == prev_sum
+            prev_sum = new_sum
+        else:
+            changed = new_labels.join(
+                labels.withColumnRenamed("component", "_old"), "node"
+            ).filter(F.col("component") != F.col("_old"))
+            unchanged = changed.limit(1).count() == 0
         labels = new_labels
-        if new_sum == prev_sum:
+        if unchanged:
             converged = True
             break
-        prev_sum = new_sum
     return labels, converged
 
 

@@ -143,15 +143,21 @@ def filter_new(
     rows of ``candidates`` whose ``url_hash`` is NOT in ``seen``.
 
     With Bloom shards: definitely-new rows bypass the join entirely;
-    only maybe-seen rows pay the exact ``left_anti``.  Without shards:
-    plain ``left_anti`` (AQE picks broadcast vs shuffle side).
+    only maybe-seen rows pay the exact ``left_anti``.  An empty shard map
+    means no key was ever inserted, i.e. ``shards`` stands for an empty
+    ``seen``: ``candidates`` come back unchanged, with no probe and no
+    join (the probe would answer "definitely new" for every row).
+    Without shards (``None``): plain ``left_anti`` (AQE picks broadcast vs
+    shuffle side).
     """
     if shards is None:
         return candidates.join(seen.select("url_hash"), "url_hash", "left_anti")
+    if not shards:
+        return candidates
     spark = candidates.sparkSession
     # dispatch on the blob tag: cuckoo shards (deletable fallback) carry a
     # CKF1 header; anything else is a raw Bloom bit array
-    if shards and next(iter(shards.values()))[:4] == b"CKF1":
+    if next(iter(shards.values()))[:4] == b"CKF1":
         from . import cuckoo
 
         flagged = cuckoo.cuckoo_maybe_seen(spark, candidates, shards, num_shards)

@@ -438,11 +438,12 @@ def run_round(
     if scratch is not None:
         # columnar round state: the six status branches + metrics prune to
         # the narrow frontier columns; only documents/link extraction read
-        # the heavy spans column chunks
+        # the heavy spans column chunks.  Read back with the known schema:
+        # inferring it from the footers is one more job per round
         path = f"{scratch}/fetched_r{round_no:05d}"
         state_out = fetched_lazy.drop("html") if drop_html else fetched_lazy
         state_out.write.mode("overwrite").parquet(path)
-        fetched = spark.read.parquet(path)
+        fetched = spark.read.schema(state_out.schema).parquet(path)
     else:
         fetched = fetched_lazy.localCheckpoint(
             eager=True, storageLevel=StorageLevel.DISK_ONLY
@@ -841,7 +842,11 @@ def _run_crawl_inner(
     metric_rows: list = []
     driver_mode = store is None and not resume
     robots_driver: list | None = [] if driver_mode else None
-    bloom: dict[int, bytes] | None = None
+    # the shard map tracks `seen` key for key.  A fresh crawl's seen table
+    # is empty, so its map is the empty map (no key inserted) — no shard
+    # build job over a table known to hold no rows; resume builds the map
+    # once from the committed seen table (first round below)
+    bloom: dict[int, bytes] | None = {} if cfg.use_bloom and not resume else None
     retryable = (F.col("status") == "pending") | (
         (F.col("status") == "timeout") & (F.col("attempts") < cfg.max_attempts)
     )
@@ -912,8 +917,8 @@ def _run_crawl_inner(
             if cfg.extra.get("round0_hint", True):
                 pending_hint = n_start
         if cfg.use_bloom and bloom is None:
-            # full build only on entry (empty at fresh start; one pass on
-            # resume) — thereafter updated incrementally from round deltas
+            # resume only: one full build from the committed seen table —
+            # thereafter updated incrementally from round deltas
             if cfg.filter_kind == "cuckoo":
                 from ..operators import cuckoo as ckf
 
@@ -932,6 +937,10 @@ def _run_crawl_inner(
             pending_hint=pending_hint,
         )
         pending_hint = None  # recomputed from this round's metrics below
+        # no round probes the shard map after the last possible one
+        bloom_used_again = (
+            cfg.use_bloom and bloom is not None and round_no + 1 < cfg.max_rounds
+        )
         out["documents"] = out["documents"].coalesce(n_buckets)
         if store is not None:
             # durable commits write the full seen state (an Iceberg state
@@ -1035,11 +1044,7 @@ def _run_crawl_inner(
                 "partition_id", "round", "host", "rules_txt",
                 F.lit(None).cast("string").alias("url_hash_str"),
             )
-            collect_keys = (
-                cfg.use_bloom
-                and bloom is not None
-                and cfg.filter_kind != "cuckoo"
-            )
+            collect_keys = bloom_used_again and cfg.filter_kind != "cuckoo"
             if collect_keys:
                 keys_slice = (
                     state_ck.filter(F.col("_tbl") == "seen")
@@ -1119,7 +1124,7 @@ def _run_crawl_inner(
                 for (_, event, _, _, count, _, _) in round_rows
                 if event in _RETRYABLE_EVENTS
             )
-            if cfg.use_bloom and bloom is not None:
+            if bloom_used_again:
                 if collect_keys:
                     key_strs = small_pdf.loc[
                         small_pdf["_tbl"] == "seen", "url_hash_str"
@@ -1152,7 +1157,7 @@ def _run_crawl_inner(
                         bloom, seen_delta_ck, n_delta, cfg, seen_full=seen
                     )
             _phase("driver_bookkeeping", _pt)
-        if store is not None and cfg.use_bloom and bloom is not None:
+        if store is not None and bloom_used_again:
             # store path: delta size unknown until counted — count() on the
             # committed delta is a metadata-cheap job
             delta_df = out["seen_delta"]

@@ -33,6 +33,7 @@ import os
 from typing import Literal
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TableKind = Literal["state", "append"]
 
@@ -69,19 +70,26 @@ class SnapshotStore:
         """Write all tables for ``round_no`` and atomically publish.
 
         ``extras`` carries small driver-side state (e.g. Bloom shard file
-        pointers, config echo) into the commit record.
+        pointers, config echo) into the commit record.  Each table's entry
+        records its schema, so ``read`` needs no footer-inference job; an
+        append table whose rounds disagree on the schema records none.
         """
         manifest: dict = {"round": round_no, "tables": {}, "extras": extras or {}}
         prev = self._commit_meta(round_no - 1)["tables"] if round_no > 0 else {}
         for name, (df, kind) in tables.items():
             rel = os.path.join(name, f"r{round_no}")
             df.write.mode("overwrite").parquet(os.path.join(self.root, rel))
+            schema = df.schema.jsonValue()
             if kind == "append":
                 lineage = prev.get(name, {}).get("paths", []) if prev else []
                 paths = [*lineage, rel]
+                if lineage and prev[name].get("schema") != schema:
+                    schema = None
             else:
                 paths = [rel]
-            manifest["tables"][name] = {"kind": kind, "paths": paths}
+            manifest["tables"][name] = {
+                "kind": kind, "paths": paths, "schema": schema,
+            }
         # carry forward tables not rewritten this round
         for name, meta in prev.items():
             manifest["tables"].setdefault(name, meta)
@@ -105,7 +113,12 @@ class SnapshotStore:
             raise FileNotFoundError(f"no committed snapshot for {table}")
         meta = self._commit_meta(rnd)["tables"][table]
         paths = [os.path.join(self.root, p) for p in meta["paths"]]
-        return self.spark.read.parquet(*paths)
+        reader = self.spark.read
+        if meta.get("schema"):
+            # manifests written before schemas were recorded have none:
+            # those tables are still read by inference
+            reader = reader.schema(StructType.fromJson(meta["schema"]))
+        return reader.parquet(*paths)
 
     def has_table(self, table: str, round_no: int | None = None) -> bool:
         rnd = self.current_round() if round_no is None else round_no

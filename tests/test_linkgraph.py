@@ -177,3 +177,38 @@ def test_iterative_plans_do_not_grow_with_iterations(spark):
 
     small, big = plan_size(2), plan_size(8)
     assert big <= small * 1.5, (small, big)
+
+
+def _py_components(pairs):
+    """Pure-Python union-find: node → smallest node id in its component."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
+@pytest.mark.parametrize("algorithm", ["auto", "label", "star"])
+def test_cc_url_string_ids_match_union_find(spark, algorithm):
+    """Crawl graphs name nodes by URL: string ids must converge to the
+    true components, not stop after one round of propagation."""
+    chain = [f"http://h{i % 3}.test/p{9 - i}" for i in range(10)]
+    pairs = list(zip(chain, chain[1:]))
+    pairs += [("http://z.test/b", "http://z.test/a"),
+              ("http://z.test/c", "http://z.test/b"),
+              ("http://solo.test/", "http://solo.test/")]
+    df = spark.createDataFrame(pairs, "src string, dst string")
+    labels = {
+        r["node"]: r["component"]
+        for r in LG.connected_components(df, algorithm=algorithm).collect()
+    }
+    assert labels == _py_components(pairs)

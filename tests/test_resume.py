@@ -76,6 +76,97 @@ def test_resume_bit_identical(spark, web_fixture, tmp_path_factory):
     assert _tables_signature(resumed) == _tables_signature(full)
 
 
+def test_fresh_crawl_builds_no_bloom_shards_resume_does(
+    spark, web_fixture, tmp_path, monkeypatch
+):
+    from distributed_web_crawling_and_indexing_system_gcp_spark.operators import (
+        seen as seen_ops,
+    )
+    from distributed_web_crawling_and_indexing_system_gcp_spark.plans import (
+        crawl as crawl_plan,
+    )
+
+    build, update = seen_ops.build_bloom_shards, crawl_plan._update_bloom
+    builds, updates = [], []
+
+    def no_build(*args, **kwargs):
+        raise AssertionError("a fresh crawl's seen set is empty")
+
+    def count_updates(*args, **kwargs):
+        updates.append(args)
+        return update(*args, **kwargs)
+
+    monkeypatch.setattr(seen_ops, "build_bloom_shards", no_build)
+    monkeypatch.setattr(crawl_plan, "_update_bloom", count_updates)
+    args = (spark, web_fixture["seed_jobs"], web_fixture["web_pages"],
+            web_fixture["robots_src"])
+    one_round = CrawlConfig(**{**CFG.__dict__, "max_rounds": 1})
+    run_crawl(*args, one_round)["frontier"].count()
+    store = SnapshotStore(str(tmp_path), spark)
+    run_crawl(*args, CrawlConfig(**{**CFG.__dict__, "max_rounds": 2}),
+              store=store)
+    assert store.current_round() == 1
+    # the map is updated after round 0 of the 2-round crawl only: no
+    # round probes it after the last possible one
+    assert len(updates) == 1
+
+    def spy_build(*a, **kw):
+        builds.append(a)
+        return build(*a, **kw)
+
+    monkeypatch.setattr(seen_ops, "build_bloom_shards", spy_build)
+    run_crawl(*args, CrawlConfig(**{**CFG.__dict__, "max_rounds": 3}),
+              store=store, resume=True)
+    assert store.current_round() == 2
+    assert len(builds) == 1
+
+
+def test_manifest_schema_skips_inference(spark, tmp_path):
+    store = SnapshotStore(str(tmp_path / "new"), spark)
+    df = spark.range(5).selectExpr("id", "CAST(id AS string) AS s")
+    store.commit_round(0, {"t": (df, "state"), "a": (df, "append")})
+    store.commit_round(1, {"a": (df, "append")})
+    meta = store._commit_meta(1)["tables"]
+    assert meta["t"]["schema"] == df.schema.jsonValue()
+    assert meta["a"]["schema"] == df.schema.jsonValue()
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def read_jobs(group, table):
+        sc.setJobGroup(group, "snapshot read")
+        try:
+            got = store.read(table)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return got, tracker.getJobIdsForGroup(group)
+
+    got, jobs = read_jobs("read-with-schema", "a")
+    assert jobs == []
+    assert got.schema.simpleString() == df.schema.simpleString()
+    assert got.count() == 10
+
+    # a manifest written before schemas were recorded reads by inference,
+    # which costs the footer job the recorded schema saves
+    path = os.path.join(store.root, "_commits", "r1.json")
+    with open(path) as f:
+        old = json.load(f)
+    for m in old["tables"].values():
+        del m["schema"]
+    with open(path, "w") as f:
+        json.dump(old, f)
+    got, jobs = read_jobs("read-by-inference", "a")
+    assert len(jobs) >= 1
+    assert got.schema.simpleString() == df.schema.simpleString()
+    assert store.read("t").count() == 5
+
+    # an append round with a different schema records none
+    other = SnapshotStore(str(tmp_path / "mixed"), spark)
+    other.commit_round(0, {"a": (df, "append")})
+    other.commit_round(1, {"a": (df.selectExpr("id"), "append")})
+    assert other._commit_meta(1)["tables"]["a"]["schema"] is None
+
+
 def test_commit_atomicity(spark, tmp_path):
     store = SnapshotStore(str(tmp_path), spark)
     df = spark.range(5).selectExpr("id", "id * 2 AS v")

@@ -60,6 +60,13 @@ def test_empty_seen_all_new(spark):
     assert S.filter_new(cands, seen, shards, SHARDS, BITS).count() == 50
 
 
+def test_empty_shard_map_returns_candidates_unchanged(spark):
+    # an empty map means no key was ever inserted: no probe, no join —
+    # the very same DataFrame comes back, whatever `seen` holds
+    cands = _seen_df(spark, 50)
+    assert S.filter_new(cands, _seen_df(spark, 10), {}, SHARDS, BITS) is cands
+
+
 def test_bloom_delta_paths_identical(spark):
     # driver numpy insert vs distributed build+or over the same delta must
     # produce bit-identical shard maps (run_crawl switches between them on
