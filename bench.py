@@ -86,7 +86,6 @@ def run_crawl_workload(spark, web, robots, seeds, budget: int = 32_000,
         bloom_shards=32,
         bloom_bits_per_shard=1 << 20,
         max_rounds=depth + 2,
-        extra=json.loads(os.environ.get("SPARK_GRAFT_CRAWL_EXTRA", "{}")),
     )
     out = run_crawl(spark, seeds, web, robots, cfg)
     # one job for both totals (count + conditional count in a single agg)

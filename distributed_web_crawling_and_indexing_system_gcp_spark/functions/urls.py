@@ -112,79 +112,6 @@ def resolve_and_parse_udf(base: pd.Series, href: pd.Series) -> pd.DataFrame:
     )
 
 
-# Optimizer fence (guide §4.4): the scheme/netloc validity filter sits
-# directly on this UDF's output, and the filter-pushdown rule would
-# otherwise evaluate the UDF TWICE — once below the pushed filter, once
-# in the surviving projection (both plans showed two ArrowEvalPython
-# nodes for one call).  The function is genuinely deterministic; the
-# non-deterministic marking only pins it to a single evaluation.
-_resolve_and_parse_once = None
-
-
-def _resolve_nd():
-    global _resolve_and_parse_once
-    if _resolve_and_parse_once is None:
-        _resolve_and_parse_once = resolve_and_parse_udf.asNondeterministic()
-    return _resolve_and_parse_once
-
-
-def resolve_and_parse_expr(base: Column, href: Column) -> Column:
-    """:func:`resolve_and_parse_udf` with a pure-Catalyst fast path for
-    PROVABLY-SIMPLE absolute links — the common case of a real link
-    stream (the crawl fixture's links are ~80 % absolute http(s) URLs).
-
-    For an href that (after clean) starts ``http(s)://`` with a non-empty
-    netloc, ``urljoin`` returns it unchanged (verified: same-scheme
-    returns the urlsplit round trip, different-scheme returns it
-    verbatim; dot segments are NOT normalized for absolute refs), so the
-    whole Python round trip is three string expressions.  The guard
-    excludes every corner where CPython's ``urllib`` semantics diverge
-    from the string form — each exclusion routes the row to the exact
-    UDF, never changes a value:
-
-    - empty netloc (``http:///x`` inherits the BASE netloc in urljoin);
-    - ``;`` anywhere (urlparse splits params out of the canonical path);
-    - ``\\t`` anywhere (urlsplit strips tabs, WHATWG bpo-43882);
-    - ``?`` with empty query and trailing ``#`` (urlunsplit drops them);
-    - a non-printable-ASCII final char (Python ``str.strip`` removes
-      unicode whitespace the JVM ``trim`` does not).
-
-    The UDF input is NULL-masked on fast rows, so the Python worker does
-    a null check instead of join+parse for them.  Equivalence is pinned
-    by tests/test_urls.py::test_resolve_expr_matches_udf over an
-    adversarial corpus.
-
-    NOT used by the crawl plan: interleaved A/Bs at the 20 k bench shape
-    measured it 15-25 % slower end-to-end than the plain fused UDF (the
-    Python resolve is cheap and pipelined; the guard regexes and the
-    conditional struct multiply across the link projection's consumers).
-    Kept as the validated option for link streams whose Python boundary
-    IS the bottleneck (e.g. much wider frontiers per executor core).
-    """
-    h = clean_col(href)
-    simple = (
-        h.rlike("^https?://[^/?#]")
-        & h.rlike("[!-~]$")
-        & ~h.contains(";")
-        & ~h.contains("\t")
-        & ~h.rlike("\\?(#|$)")
-        & ~h.rlike("#$")
-    )
-    fast = F.struct(
-        h.alias("new_url"),
-        F.substring_index(h, "://", 1).alias("scheme"),
-        F.regexp_extract(h, "^https?://([^/?#]*)", 1).alias("netloc"),
-        F.regexp_replace(
-            F.lower(F.substring_index(h, "#", 1)), "/+$", ""
-        ).alias("canonical"),
-    )
-    slow = _resolve_nd()(
-        F.when(simple, F.lit(None).cast("string")).otherwise(base),
-        F.when(simple, F.lit(None).cast("string")).otherwise(href),
-    )
-    return F.when(simple, fast).otherwise(slow)
-
-
 @pandas_udf(StringType())
 def robots_url_udf(urls: pd.Series) -> pd.Series:
     """``f"{scheme}://{netloc}/robots.txt"`` (crawler_node.py:114)."""
@@ -247,7 +174,6 @@ __all__ = [
     "scheme_udf",
     "resolve_link_udf",
     "resolve_and_parse_udf",
-    "resolve_and_parse_expr",
     "robots_url_udf",
     "clean_col",
     "canonicalize_col",

@@ -1,5 +1,4 @@
 from . import (  # noqa: F401
-    cuckoo,
     dedup,
     multimodal,
     politeness,

@@ -154,17 +154,9 @@ def filter_new(
         return candidates.join(seen.select("url_hash"), "url_hash", "left_anti")
     if not shards:
         return candidates
-    spark = candidates.sparkSession
-    # dispatch on the blob tag: cuckoo shards (deletable fallback) carry a
-    # CKF1 header; anything else is a raw Bloom bit array
-    if next(iter(shards.values()))[:4] == b"CKF1":
-        from . import cuckoo
-
-        flagged = cuckoo.cuckoo_maybe_seen(spark, candidates, shards, num_shards)
-    else:
-        flagged = bloom_maybe_seen(
-            spark, candidates, shards, num_shards, bits_per_shard
-        )
+    flagged = bloom_maybe_seen(
+        candidates.sparkSession, candidates, shards, num_shards, bits_per_shard
+    )
     definitely_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
     maybe = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
     confirmed_new = maybe.join(seen.select("url_hash"), "url_hash", "left_anti")

@@ -36,11 +36,16 @@ pending-row count per round and the (MB-sized) Bloom shard map.
 
 from __future__ import annotations
 
+import itertools
+import time
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.storagelevel import StorageLevel
 
 from ..functions import urls as U
 from ..functions.html import links_view, parse_html_udf, text_view
@@ -67,6 +72,8 @@ FRONTIER_SCHEMA = T.StructType(
 
 SEEN_SCHEMA = "url_hash long, url string"
 
+ROBOTS_SCHEMA = "host string, rules_txt string"
+
 DOCUMENTS_SCHEMA = (
     "doc_id string, canonical_url string, task_id string, depth int, round int, "
     "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>, "
@@ -81,9 +88,7 @@ METRICS_SCHEMA = (
 # distinguishes scratch dirs of multiple run_crawl calls; itertools.count's
 # next() is atomic under the GIL, so threads racing run_crawl in one session
 # can never draw the same suffix (ADVICE r3)
-import itertools as _itertools
-
-_RUN_SEQ = _itertools.count(1)
+_RUN_SEQ = itertools.count(1)
 
 
 @dataclass
@@ -94,8 +99,6 @@ class CrawlConfig:
     max_attempts: int = 3               # timeout retries (T2)
     bloom_shards: int = 16
     bloom_bits_per_shard: int = 1 << 18
-    use_bloom: bool = True
-    filter_kind: str = "bloom"  # "bloom" | "cuckoo" (deletable fallback)
     max_rounds: int = 64
     # per-round seen-delta sizes up to this collect driver-side for the
     # numpy Bloom insert; above it the distributed build_bloom_shards +
@@ -194,6 +197,25 @@ def _empty(spark: SparkSession, schema) -> DataFrame:
     return spark.createDataFrame([], schema)
 
 
+def _retryable(cfg: CrawlConfig):
+    """Frontier rows a round may still process."""
+    return (F.col("status") == "pending") | (
+        (F.col("status") == "timeout") & (F.col("attempts") < cfg.max_attempts)
+    )
+
+
+def _phase(cfg: CrawlConfig, round_no: int, name: str, t0: float) -> float:
+    """Opt-in phase profiling: ``cfg.extra["phase_log"]`` is a caller-owned
+    list that collects ``(round_no, phase, seconds since t0)`` for the
+    serial-fraction audit (tools/profile_serial.py, crawlbench); absent in
+    normal runs = zero cost.  Returns now, the next phase's t0."""
+    now = time.perf_counter()
+    log = cfg.extra.get("phase_log")
+    if log is not None:
+        log.append((round_no, name, now - t0))
+    return now
+
+
 def _extract_links(ok_html: DataFrame, cfg: CrawlConfig) -> DataFrame:
     """ok_html: fetched rows + parsed column; returns candidate child rows
     (pre seen-dedup).  Columns: canonical child url/host/hash + lineage +
@@ -211,12 +233,11 @@ def _extract_links(ok_html: DataFrame, cfg: CrawlConfig) -> DataFrame:
         F.posexplode(links_view(F.col("spans"))).alias("link_pos", "href"),
     )
     # ONE fused Arrow pass: urljoin + urlparse + canonicalize.  A guarded
-    # pure-Catalyst fast path for simple absolute links exists
-    # (U.resolve_and_parse_expr, equivalence-tested) but was measured
+    # pure-Catalyst route for simple absolute links was built and measured
     # 15-25 % SLOWER end-to-end in interleaved A/Bs — the Python resolve
     # of the link stream is cheap and pipelined, while the guard/struct
     # expressions multiply across this projection's many consumers —
-    # so the plain fused UDF stays (guide §1.1: measure, don't assume).
+    # so it was deleted and the fused UDF is the only route.
     resolved = links.withColumn(
         "_rp", U.resolve_and_parse_udf(F.col("base_url"), F.col("href"))
     )
@@ -248,8 +269,8 @@ def run_round(
     web_pages: DataFrame,
     robots_src: DataFrame,
     cfg: CrawlConfig,
-    bloom: dict[int, bytes] | None = None,
-    scratch: str | None = None,
+    bloom: dict[int, bytes],
+    scratch: str,
     pending_hint: int | None = None,
 ) -> dict[str, DataFrame]:
     """Execute one crawl round; returns the post-round tables (lazy DFs).
@@ -262,31 +283,18 @@ def run_round(
     ``robots_src(host, rules_txt)`` is the closed-world robots fixture —
     hosts absent from it are "fetch failed ⇒ permissive" (null rules).
 
+    ``bloom``: the Bloom shard map of ``seen`` (``seen_ops.filter_new``).
+
     ``scratch``: directory for the round's fetch-result materialization as
-    PARQUET instead of a row-serialized localCheckpoint.  The fetch result
-    is ~95% html+spans by bytes but most consumers (six status branches,
-    metrics) need only the narrow frontier columns — columnar storage
-    gives them column pruning, so only the documents/link branches pay for
-    the heavy payload.  On a cluster this is exactly an Iceberg/Delta
-    round-state table on local SSD/object storage.
+    PARQUET.  The fetch result is ~95% html+spans by bytes but most
+    consumers (six status branches, metrics) need only the narrow frontier
+    columns — columnar storage gives them column pruning, so only the
+    documents/link branches pay for the heavy payload.  On a cluster this
+    is exactly an Iceberg/Delta round-state table on local SSD/object
+    storage.
     """
-    # opt-in phase profiling: cfg.extra["phase_log"] is a caller-owned list
-    # that collects (round_no, phase, seconds) for the serial-fraction
-    # audit (tools/profile_serial.py); absent in normal runs = zero cost
-    import time as _time
-
-    _phase_log = cfg.extra.get("phase_log")
-    _t_round0 = _time.perf_counter()
-
-    def _phase(name: str, t0: float) -> float:
-        now = _time.perf_counter()
-        if _phase_log is not None:
-            _phase_log.append((round_no, name, now - t0))
-        return now
-
-    retryable = (F.col("status") == "pending") | (
-        (F.col("status") == "timeout") & (F.col("attempts") < cfg.max_attempts)
-    )
+    _t = time.perf_counter()
+    retryable = _retryable(cfg)
     pending = frontier.filter(retryable)
     settled = frontier.filter(~retryable)
 
@@ -356,7 +364,6 @@ def run_round(
     batch_adds = new_batch.select(
         "url_hash", F.col("canonical_url").alias("url")
     ).join(seen.select("url_hash"), "url_hash", "left_anti")
-    seen_after_batch = seen.unionByName(batch_adds)
 
     # -- robots: fetch-once-per-new-host, then broadcast-join gate ----------
     to_fetch = new_batch.unionByName(retries)
@@ -380,8 +387,6 @@ def run_round(
     # arrays bloats ~10× and gets evicted under load — the re-parse that
     # follows was measured at >600 core-s per round at bench scale.)
     # Non-HTML/error rows carry html=null ⇒ parse yields null spans.
-    from pyspark.storagelevel import StorageLevel
-
     # fetch route: the closed-world fixture join (tests/bench — no Python
     # in the path) or, when cfg.extra["fetcher"] injects a request
     # callable, the REAL production stage — grouped applyInPandas per
@@ -409,18 +414,14 @@ def run_round(
     #   (guide §1.2: don't compute what you throw away — at max_depth=1
     #   that is HALF the fetched pages), so their spans are derived
     #   lazily by the documents sink below, only if a caller
-    #   materializes documents.  Opt out: extra["lazy_parse"]=False.
-    _eff_limit = F.coalesce(F.col("depth_limit"), F.lit(cfg.max_depth))
-    if cfg.extra.get("lazy_parse", True):
-        _parse_mask = (F.col("fetch_outcome") == "ok_html") & (
-            F.col("depth") < _eff_limit
-        )
-    else:
-        _parse_mask = F.col("fetch_outcome") == "ok_html"
+    #   materializes documents.
+    _parse_mask = (F.col("fetch_outcome") == "ok_html") & (
+        F.col("depth") < F.coalesce(F.col("depth_limit"), F.lit(cfg.max_depth))
+    )
     fetched_lazy = classify_fetch(raw_fetched).withColumn(
         "spans", parse_html_udf(F.when(_parse_mask, F.col("html")))
     )
-    _t = _phase("plan_build_prefetch", _t_round0)
+    _t = _phase(cfg, round_no, "plan_build_prefetch", _t)
     # NARROW round state (VERDICT r5 #2 / guide §8: "make every shuffle
     # but the last operate on a lightweight proxy"): with the closed-world
     # synthetic fetcher the raw ``html`` bodies are deterministically
@@ -429,26 +430,17 @@ def run_round(
     # column entirely; ``documents`` re-attaches html with one lazy join
     # that only executes if a caller materializes the documents sink.
     # With an injected production fetcher bodies are NOT refetchable and
-    # stay inline.  Opt out with extra["narrow_round_state"]=False.
-    drop_html = (
-        scratch is not None
-        and cfg.extra.get("fetcher") is None
-        and cfg.extra.get("narrow_round_state", True)
-    )
-    if scratch is not None:
-        # columnar round state: the six status branches + metrics prune to
-        # the narrow frontier columns; only documents/link extraction read
-        # the heavy spans column chunks.  Read back with the known schema:
-        # inferring it from the footers is one more job per round
-        path = f"{scratch}/fetched_r{round_no:05d}"
-        state_out = fetched_lazy.drop("html") if drop_html else fetched_lazy
-        state_out.write.mode("overwrite").parquet(path)
-        fetched = spark.read.schema(state_out.schema).parquet(path)
-    else:
-        fetched = fetched_lazy.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.DISK_ONLY
-        )
-    _t = _phase("fetch_materialize", _t)
+    # stay inline.
+    drop_html = cfg.extra.get("fetcher") is None
+    # columnar round state: the six status branches + metrics prune to the
+    # narrow frontier columns; only documents/link extraction read the
+    # heavy spans column chunks.  Read back with the known schema:
+    # inferring it from the footers is one more job per round
+    path = f"{scratch}/fetched_r{round_no:05d}"
+    state_out = fetched_lazy.drop("html") if drop_html else fetched_lazy
+    state_out.write.mode("overwrite").parquet(path)
+    fetched = spark.read.schema(state_out.schema).parquet(path)
+    _t = _phase(cfg, round_no, "fetch_materialize", _t)
     ok_html = fetched.filter(F.col("fetch_outcome") == "ok_html")
 
     # -- documents: one row per fetched HTML page ---------------------------
@@ -503,15 +495,12 @@ def run_round(
     # are NARROW (urls + lineage keys, no html/spans), so caching them is
     # cheap relative to one extra decompress+explode+UDF pass.
     candidates = candidates.persist()
-    if cfg.use_bloom and bloom is not None:
-        # the shard map was built from round-start `seen`, so run the Bloom
-        # fast path against that set, then an exact anti-join against this
-        # round's (small) batch additions which the shards don't cover yet
-        fresh = seen_ops.filter_new(
-            candidates, seen, bloom, cfg.bloom_shards, cfg.bloom_bits_per_shard
-        ).join(new_batch.select("url_hash"), "url_hash", "left_anti")
-    else:
-        fresh = seen_ops.filter_new(candidates, seen_after_batch)
+    # the shard map was built from round-start `seen`, so run the Bloom
+    # fast path against that set, then an exact anti-join against this
+    # round's (small) batch additions which the shards don't cover yet
+    fresh = seen_ops.filter_new(
+        candidates, seen, bloom, cfg.bloom_shards, cfg.bloom_bits_per_shard
+    ).join(new_batch.select("url_hash"), "url_hash", "left_anti")
     dedup_w = Window.partitionBy("url_hash").orderBy(
         "child_depth", "parent_canonical", "link_pos"
     )
@@ -536,21 +525,14 @@ def run_round(
     # local[32] stage race bit).  With `fresh` persisted the warm-up
     # wins at every level (20k-page A/B, fresh JVMs: local[2] 102 s vs
     # 115 s, local[8] 60 s vs 79 s — and the unpersisted r4 baseline was
-    # 170/90 s).  Overridable via extra["warmup"].
-    warmup = cfg.extra.get("warmup")
-    if warmup is None:
-        # skip the warm-up JOB (but keep the persist) on provably-small
-        # retry rounds: when the batch fits under the per-host budget the
-        # chain a racing consumer would recompute is tiny, and the saved
-        # job submission (~2-3 s) is pure serial-fraction reduction
-        warmup = not (
-            pending_hint is not None
-            and pending_hint <= cfg.politeness_budget
-        )
-    if warmup:
-        _t = _phase("plan_build_mid", _t)
+    # 170/90 s).  The warm-up JOB (not the persist) is skipped on
+    # provably-small retry rounds: when the batch fits under the per-host
+    # budget the chain a racing consumer would recompute is tiny, and the
+    # saved job submission (~2-3 s) is pure serial-fraction reduction.
+    if pending_hint is None or pending_hint > cfg.politeness_budget:
+        _t = _phase(cfg, round_no, "plan_build_mid", _t)
         fresh.count()
-        _t = _phase("warmup_count", _t)
+        _t = _phase(cfg, round_no, "warmup_count", _t)
     new_frontier = fresh.select(
         F.col("canonical_url").alias("url"),  # children enqueue normalized
         F.col("canonical_url"),
@@ -692,7 +674,7 @@ def run_round(
 
     # Bloom maintenance keys come from seen_delta (exactly the keys by
     # which `seen` grows — the shard map tracks `seen` bit-for-bit)
-    _phase("plan_build_postfetch", _t)
+    _phase(cfg, round_no, "plan_build_postfetch", _t)
     return {
         "frontier": frontier_after,
         "seen": seen_final,
@@ -705,63 +687,267 @@ def run_round(
     }
 
 
-def _update_bloom(
-    bloom: dict[int, bytes],
-    delta_df: DataFrame,
-    n_delta: int,
+class _Round(NamedTuple):
+    """What a sink hands the round loop: next round's state tables, the
+    round's metric rows and its seen-delta key slice (both None when no
+    round can follow) and the seen delta itself (the Bloom fallback's
+    input)."""
+
+    frontier: DataFrame
+    seen: DataFrame
+    robots: DataFrame
+    metric_rows: list | None
+    keys: object | None  # pandas Series of decimal-string url_hash keys
+    seen_delta: DataFrame
+
+
+def _collect_small(
+    small: DataFrame,
+    seen_delta: DataFrame,
     cfg: CrawlConfig,
-    seen_full: DataFrame | None = None,
+    round_no: int,
+    with_keys: bool,
+    t: float,
+):
+    """ONE Arrow-backed collect of a round's tiny ``_tbl``-tagged rows
+    (metrics, plus robots in driver mode) and, with ``with_keys``, of the
+    round's seen-delta keys for the Bloom update.
+
+    Two corruption/safety rules, both learned the hard way (ADVICE r2):
+    - the keys ride as STRINGS: the other rows carry a null key, and
+      Arrow's null-int64 → float64 pandas conversion silently rounds away
+      the low bits of xxhash64 keys (53-bit mantissa) — the Bloom map would
+      then track the WRONG keys and re-linked URLs would be re-crawled.
+      Decimal strings round-trip exactly.
+    - the slice is LIMIT-bounded to bloom_delta_collect_max+1: a
+      breadth-explosion round can never pull an oversized delta through
+      the driver; hitting the bound makes ``_update_bloom`` fall back to
+      the distributed shard build.
+
+    Returns ``(pandas frame, metric rows, key strings or None, now)``.
+    """
+    if with_keys:
+        keys_slice = (
+            seen_delta.select(F.col("url_hash").cast("string").alias("url_hash_str"))
+            .limit(cfg.bloom_delta_collect_max + 1)
+            .withColumn("_tbl", F.lit("seen"))
+        )
+        small = small.unionByName(keys_slice, allowMissingColumns=True)
+    t = _phase(cfg, round_no, "collect_plan_build", t)
+    pdf = small.toPandas()
+    t = _phase(cfg, round_no, "collect_small", t)
+    m = pdf[pdf["_tbl"] == "metrics"]
+    rows = [
+        (nt, ev, tid, url, int(cnt), int(pid), int(rnd))
+        for nt, ev, tid, url, cnt, pid, rnd in zip(
+            m["node_type"], m["event"], m["task_id"], m["url"],
+            m["count"], m["partition_id"], m["round"],
+        )
+    ]
+    keys = pdf.loc[pdf["_tbl"] == "seen", "url_hash_str"] if with_keys else None
+    return pdf, rows, keys, t
+
+
+class _DriverSink:
+    """No store: materialize each round via localCheckpoint to cut lineage
+    growth.  DISK_ONLY keeps round history (esp. documents with full html)
+    OFF the driver heap — deserialized in-memory checkpoints accumulate
+    across rounds and trigger GC storms; "disk" is spark.local.dir
+    (tmpfs-if-roomy here, local SSD on a real cluster), so reads stay fast.
+
+    The driver round loop is the crawl's serial (Amdahl) fraction — every
+    Spark ACTION costs planning + per-stage scheduling latency that no
+    executor count amortizes.  So the round's four state products
+    (frontier, seen delta, metrics, robots delta) materialize in ONE
+    union-tagged checkpoint (schemas padded with nulls via
+    allowMissingColumns) and split back out as narrow filters OVER the
+    checkpoint; the tiny metrics + robots rows (+ the Bloom keys) then come
+    back in ONE collect.  2 jobs/round instead of 5.
+    """
+
+    _CK = {"eager": True, "storageLevel": StorageLevel.DISK_ONLY}
+
+    def __init__(self, spark: SparkSession, cfg: CrawlConfig, n_buckets: int):
+        self.spark, self.cfg, self.n_buckets = spark, cfg, n_buckets
+        self.documents = _empty(spark, DOCUMENTS_SCHEMA)
+        self.metric_rows: list = []
+        # robots rules: one small row per distinct host ever seen —
+        # driver-side while the host count is bounded (gate joins a local
+        # relation, no checkpoint job); beyond cfg.robots_driver_max hosts
+        # the rules stay a DataFrame of checkpointed deltas (10^7 hosts × KB
+        # rules never transit the driver)
+        self.robots_driver: list | None = []
+
+    def __call__(self, round_no, out, seen, robots_rules, more, t) -> tuple:
+        cfg, n_buckets = self.cfg, self.n_buckets
+        tagged = out["frontier"].withColumn("_tbl", F.lit("frontier"))
+        for tbl, key in (("seen", "seen_delta"), ("metrics", "metrics"),
+                         ("robots", "robots_delta")):
+            tagged = tagged.unionByName(
+                out[key].withColumn("_tbl", F.lit(tbl)), allowMissingColumns=True
+            )
+        t = _phase(cfg, round_no, "state_plan_build", t)
+        state_ck = tagged.repartition(n_buckets, "url_hash").localCheckpoint(**self._CK)
+        t = _phase(cfg, round_no, "state_checkpoint", t)
+        frontier = state_ck.filter(F.col("_tbl") == "frontier").select(
+            [f.name for f in FRONTIER_SCHEMA.fields]
+        )
+        seen_delta = state_ck.filter(F.col("_tbl") == "seen").select("url_hash", "url")
+        small = state_ck.filter(F.col("_tbl").isin(["metrics", "robots"])).select(
+            "_tbl", "node_type", "event", "task_id", "url", "count",
+            "partition_id", "round", "host", "rules_txt",
+        )
+        pdf, rows, keys, t = _collect_small(small, seen_delta, cfg, round_no, more, t)
+        self.metric_rows.extend(rows)
+        # seen grows append-only: the round DELTA is a narrow slice of the
+        # state checkpoint and the full set stays a lazy union of those
+        # slices — never rewrites crawl history.  Compact periodically so
+        # partition count stays bounded on long crawls.
+        seen = seen.unionByName(seen_delta)
+        if (round_no + 1) % 8 == 0:
+            seen = seen.repartition(n_buckets, "url_hash").localCheckpoint(**self._CK)
+        # documents is a narrow select over the round's fetched parquet —
+        # no second serialization pass needed
+        self.documents = self.documents.unionByName(out["documents"])
+        if self.robots_driver is not None:
+            rb = pdf[pdf["_tbl"] == "robots"]
+            self.robots_driver.extend(zip(rb["host"].tolist(), rb["rules_txt"].tolist()))
+            robots_rules = (
+                self.spark.createDataFrame(self.robots_driver, ROBOTS_SCHEMA)
+                if self.robots_driver
+                else _empty(self.spark, ROBOTS_SCHEMA)
+            )
+            if len(self.robots_driver) > cfg.robots_driver_max:
+                # seed the DataFrame path with the accumulated rules, then
+                # stop routing rules through the driver
+                robots_rules = robots_rules.localCheckpoint(**self._CK)
+                self.robots_driver = None
+        else:
+            robots_rules = robots_rules.unionByName(
+                state_ck.filter(F.col("_tbl") == "robots").select("host", "rules_txt")
+            )
+            if (round_no + 1) % 8 == 0:
+                robots_rules = robots_rules.coalesce(1).localCheckpoint(**self._CK)
+        return _Round(frontier, seen, robots_rules, rows, keys, seen_delta), t
+
+    def result(self, frontier, seen, robots_rules) -> dict[str, DataFrame]:
+        metrics = (
+            self.spark.createDataFrame(self.metric_rows, METRICS_SCHEMA)
+            if self.metric_rows
+            else _empty(self.spark, METRICS_SCHEMA)
+        )
+        return {
+            "frontier": frontier,
+            "seen": seen,
+            "documents": _latest_documents(self.documents),
+            "metrics": metrics,
+            "robots": robots_rules,
+        }
+
+
+class _StoreSink:
+    """Each round commits atomically to a SnapshotStore and the next round
+    reads the committed state back (resume continues from it).  Durable
+    commits write the full seen state (an Iceberg state table); the
+    bucketing keeps files/partitions bounded."""
+
+    def __init__(self, store: SnapshotStore, cfg: CrawlConfig, n_buckets: int):
+        self.store, self.cfg, self.n_buckets = store, cfg, n_buckets
+
+    def __call__(self, round_no, out, seen, robots_rules, more, t) -> tuple:
+        cfg, n_buckets, store = self.cfg, self.n_buckets, self.store
+        store.commit_round(
+            round_no,
+            {
+                "frontier": (out["frontier"].repartition(n_buckets, "url_hash"), "state"),
+                "seen": (out["seen"].repartition(n_buckets, "url_hash"), "state"),
+                "robots": (out["robots"].coalesce(1), "state"),  # ≤ one row per host
+                "documents": (out["documents"], "append"),
+                "metrics": (out["metrics"].coalesce(n_buckets), "append"),
+            },
+            extras={"config": {"budget": cfg.politeness_budget,
+                               "max_depth": cfg.max_depth,
+                               "salt_buckets": cfg.salt_buckets}},
+        )
+        t = time.perf_counter()  # the commit stays outside the phase log
+        rows = keys = None
+        if more:
+            # the committed round's metric rows + the delta keys, one job
+            small = store.read("metrics").filter(F.col("round") == round_no)
+            small = small.withColumn("_tbl", F.lit("metrics"))
+            _, rows, keys, t = _collect_small(
+                small, out["seen_delta"], cfg, round_no, True, t
+            )
+        return _Round(
+            store.read("frontier"), store.read("seen"), store.read("robots"),
+            rows, keys, out["seen_delta"],
+        ), t
+
+    def result(self, *_) -> dict[str, DataFrame]:
+        store = self.store
+        return {
+            "frontier": store.read("frontier"),
+            "seen": store.read("seen"),
+            "documents": _latest_documents(store.read("documents")),
+            "metrics": store.read("metrics"),
+            "robots": store.read("robots"),
+        }
+
+
+def _latest_documents(documents: DataFrame) -> DataFrame:
+    """Last-write-wins document surface (reference ES upsert keyed by URL,
+    indexer_node.py:145-156): the round log is append-only; the returned
+    `documents` collapses re-crawled URLs to their newest version.  With
+    the in-run seen-set this is the identity — it matters on resume-
+    after-reset / forced-refresh crawls where a URL re-enters the
+    frontier.  One key-partitioned window, no global ordering."""
+    from ..operators.dedup import keep_latest
+
+    return keep_latest(documents, ["canonical_url"], "round", tiebreak_col="doc_id")
+
+
+def _update_bloom(
+    bloom: dict[int, bytes], keys, seen_delta: DataFrame, cfg: CrawlConfig
 ) -> dict[int, bytes]:
     """Insert a round's seen-delta keys into the shard map.
 
-    Small deltas (≤ ``cfg.bloom_delta_collect_max`` keys) collect to the
-    driver for one vectorized numpy pass.  Larger deltas run the
-    distributed ``build_bloom_shards`` over the delta and bitwise-OR the
-    resulting shard blobs into the map (``or_shards``) — a breadth-y round
-    at 10^10-URL scale adds billions of keys, which must never transit the
-    driver.  Both paths are bit-identical (asserted by
-    tests/test_seen.py::test_bloom_delta_paths_identical).
-
-    Cuckoo shards can't be bitwise-ORed, so big cuckoo deltas instead
-    rebuild the shard map distributedly from ``seen_full`` (the complete
-    post-round seen set) — bounded driver contact either way.
+    ``keys`` is the delta's key slice as collected by ``_collect_small``.
+    Under the bound it is the whole delta: exact int64 keys via a C-speed
+    decimal-string parse, then one vectorized numpy insert driver-side.  At
+    the bound the delta is too big to transit the driver — a breadth-y
+    round at 10^10-URL scale adds billions of keys — so the distributed
+    ``build_bloom_shards`` runs over ``seen_delta`` and its shard blobs are
+    bitwise-ORed into the map (``or_shards``).  Both paths are
+    bit-identical (tests/test_seen.py::test_bloom_delta_paths_identical).
     """
-    import numpy as _np
-
-    if cfg.filter_kind == "cuckoo":
-        from ..operators import cuckoo as ckf
-
-        if n_delta > cfg.bloom_delta_collect_max:
-            # never collect an oversized delta driver-side: rebuild the
-            # cuckoo shards executor-side from the full seen set and
-            # collect only the MB-sized blobs
-            assert seen_full is not None, "big cuckoo delta needs seen_full"
-            shards_df = ckf.build_cuckoo_shards(
-                seen_full, cfg.bloom_shards,
-                max(cfg.bloom_bits_per_shard // 64, 1024),
-            )
-            return seen_ops.shards_to_dict(shards_df)
-        keys = _np.array(
-            [r[0] for r in delta_df.select("url_hash").collect()], dtype=_np.int64
-        )
-        by_shard = {
-            int(s): keys[_np.mod(keys, cfg.bloom_shards) == s]
-            for s in _np.unique(_np.mod(keys, cfg.bloom_shards))
-        }
-        return ckf.merge_shards(
-            bloom, by_shard, max(cfg.bloom_bits_per_shard // 64, 1024)
-        )
-    if n_delta <= cfg.bloom_delta_collect_max:
-        keys = _np.array(
-            [r[0] for r in delta_df.select("url_hash").collect()], dtype=_np.int64
-        )
+    if len(keys) <= cfg.bloom_delta_collect_max:
         return seen_ops.bloom_insert_driver(
-            bloom, keys, cfg.bloom_shards, cfg.bloom_bits_per_shard
+            bloom, keys.to_numpy().astype(np.int64),
+            cfg.bloom_shards, cfg.bloom_bits_per_shard,
         )
     shards_df = seen_ops.build_bloom_shards(
-        delta_df, cfg.bloom_shards, cfg.bloom_bits_per_shard
+        seen_delta, cfg.bloom_shards, cfg.bloom_bits_per_shard
     )
     return seen_ops.or_shards(bloom, seen_ops.shards_to_dict(shards_df))
+
+
+def _scratch_dir(spark: SparkSession) -> str:
+    """Per-run scratch dir for the columnar round-state materializations —
+    a subdir of Spark's OWN managed local dir (local SSD / tmpfs), so the
+    JVM shutdown hook deletes it with the rest of the app's scratch; keyed
+    by app id so concurrent sessions never collide, and suffixed per
+    INVOCATION: two run_crawl calls in one session must not collide — the
+    second would overwrite fetched_r* parquet the first run's returned
+    (lazy) DataFrames still reference."""
+    sc = spark.sparkContext
+    try:
+        managed = sc._jvm.org.apache.spark.util.Utils.getLocalDir(sc._jsc.sc().conf())
+    except Exception:  # py4j surface moved — fall back to the raw conf dir
+        managed = sc.getConf().get("spark.local.dir", "/tmp").split(",")[0]
+    return f"{managed}/crawl-{sc.applicationId}-{next(_RUN_SEQ)}"
+
+
+_RETRYABLE_EVENTS = {"urls_deferred", "url_timeout_retryable", "new_urls_found"}
 
 
 def run_crawl(
@@ -779,48 +965,20 @@ def run_crawl(
     stop when no retryable rows remain or max_rounds hit.  With ``store``
     each round commits atomically; ``resume=True`` continues from the last
     committed round (bit-identical to an uninterrupted run — verified by
-    tests/test_resume.py).
+    tests/test_resume.py).  Without, each round lands in one in-driver
+    checkpoint.  The two modes differ ONLY in that sink step: both hand the
+    loop the next state, the round's metric rows and its seen-delta keys,
+    so the stop rule and the Bloom update below are the same for both.
     """
-    # crawl-scoped session conf (cfg.extra["conf"]): applied for the round
-    # loop and RESTORED afterwards, so callers can tune runtime knobs (AQE,
-    # partition advisories) for the crawl without leaking them into the
-    # rest of the session's queries
-    _conf_overrides = cfg.extra.get("conf") or {}
-    _conf_saved: dict[str, str | None] = {}
-    for _k, _v in _conf_overrides.items():
-        try:
-            _conf_saved[_k] = spark.conf.get(_k)
-        except Exception:
-            _conf_saved[_k] = None
-        spark.conf.set(_k, _v)
-
-    try:
-        return _run_crawl_inner(
-            spark, seed_jobs, web_pages, robots_src, cfg, store, resume
-        )
-    finally:
-        for _k, _old in _conf_saved.items():
-            if _old is None:
-                spark.conf.unset(_k)
-            else:
-                spark.conf.set(_k, _old)
-
-
-def _run_crawl_inner(
-    spark: SparkSession,
-    seed_jobs: DataFrame,
-    web_pages: DataFrame,
-    robots_src: DataFrame,
-    cfg: CrawlConfig,
-    store: SnapshotStore | None = None,
-    resume: bool = False,
-) -> dict[str, DataFrame]:
     if resume:
         assert store is not None and store.current_round() >= 0
         start_round = store.current_round() + 1
         frontier = store.read("frontier")
         seen = store.read("seen")
         robots_rules = store.read("robots")
+        # built once from the committed seen table before the first round —
+        # thereafter updated incrementally from round deltas
+        bloom = None
     else:
         start_round = 0
         valid_jobs, _rejected = validate_seed_jobs(seed_jobs)
@@ -830,29 +988,11 @@ def _run_crawl_inner(
         # re-execute per consumer
         frontier = seeds_to_frontier(spark, jobs).localCheckpoint()
         seen = _empty(spark, SEEN_SCHEMA)
-        robots_rules = _empty(spark, "host string, rules_txt string")
-
-    documents = _empty(spark, DOCUMENTS_SCHEMA)
-    metrics = _empty(spark, METRICS_SCHEMA)
-    # metrics rows are tiny per-task aggregates — in the no-store path
-    # they are collected driver-side (one small job per round) instead of
-    # checkpointed, and the driver derives the TERMINATION signal from
-    # them (deferred + retryable timeouts + new URLs == 0 ⇒ frontier
-    # drained) without an extra pending-scan job
-    metric_rows: list = []
-    driver_mode = store is None and not resume
-    robots_driver: list | None = [] if driver_mode else None
-    # the shard map tracks `seen` key for key.  A fresh crawl's seen table
-    # is empty, so its map is the empty map (no key inserted) — no shard
-    # build job over a table known to hold no rows; resume builds the map
-    # once from the committed seen table (first round below)
-    bloom: dict[int, bytes] | None = {} if cfg.use_bloom and not resume else None
-    retryable = (F.col("status") == "pending") | (
-        (F.col("status") == "timeout") & (F.col("attempts") < cfg.max_attempts)
-    )
-    _RETRYABLE_EVENTS = {"urls_deferred", "url_timeout_retryable", "new_urls_found"}
-    pending_known_empty = False
-    pending_hint: int | None = None  # unknown until a round's metrics land
+        robots_rules = _empty(spark, ROBOTS_SCHEMA)
+        # the shard map tracks `seen` key for key.  A fresh crawl's seen
+        # table is empty, so its map is the empty map (no key inserted) —
+        # no shard build job over a table known to hold no rows
+        bloom = {}
 
     # state tables are re-materialized every round; without an explicit
     # repartition the 9-branch frontier union COMPOUNDS partitions across
@@ -861,341 +1001,49 @@ def _run_crawl_inner(
     # url_hash bucketing also gives next round's anti-joins a stable
     # co-partitioning.  (At 10^10 scale the same normalization is the
     # Iceberg state-table write: bucket(url_hash) partitioning.)
-    n_buckets = int(
-        cfg.extra.get("n_buckets", spark.sparkContext.defaultParallelism)
+    n_buckets = spark.sparkContext.defaultParallelism
+    sink = (
+        _DriverSink(spark, cfg, n_buckets) if store is None
+        else _StoreSink(store, cfg, n_buckets)
     )
+    scratch = _scratch_dir(spark)
 
-    # per-run scratch dir for columnar round-state materializations — a
-    # subdir of Spark's OWN managed local dir (local SSD / tmpfs), so the
-    # JVM shutdown hook deletes it with the rest of the app's scratch;
-    # keyed by app id so concurrent sessions never collide
-    try:
-        _managed = (
-            spark.sparkContext._jvm.org.apache.spark.util.Utils.getLocalDir(
-                spark.sparkContext._jsc.sc().conf()
-            )
-        )
-    except Exception:  # py4j surface moved — fall back to the raw conf dir
-        _managed = spark.sparkContext.getConf().get(
-            "spark.local.dir", "/tmp"
-        ).split(",")[0]
-    # per-INVOCATION suffix: two run_crawl calls in one session must not
-    # collide — the second would overwrite fetched_r* parquet the first
-    # run's returned (lazy) DataFrames still reference
-    scratch = cfg.extra.get(
-        "scratch",
-        f"{_managed}/crawl-{spark.sparkContext.applicationId}-{next(_RUN_SEQ)}",
-    )
-
-    # Optional: pre-hash-partition web_pages on the join key so each
-    # round's sort-merge fetch join reuses the partitioning instead of
-    # re-exchanging the heaviest table.  Off by default: the one-time
-    # shuffle + second cached copy only amortizes on LONG crawls (many
-    # rounds); interleaved A/B at 3 rounds showed no win.  At production
-    # scale the equivalent is a bucketed/Iceberg fetch-cache table, which
-    # pays the layout cost once at ingest, not per crawl.
-    if cfg.extra.get("web_prepart", False):
-        web_pages = web_pages.repartition(n_buckets, "url").persist()
-
+    # ONE exact count before the first round (the frontier is a checkpoint
+    # or a committed table — counting it is metadata-cheap); thereafter the
+    # round's collected metric rows give the exact retryable count entering
+    # the next round: deferred + retryable timeouts + newly enqueued URLs
+    # (every other row is settled).  It is the stop rule, and lets
+    # run_round skip provably-identity windowing on under-budget rounds.
+    pending = frontier.filter(_retryable(cfg)).count()
     for round_no in range(start_round, cfg.max_rounds):
-        if pending_known_empty:
+        if pending == 0:
             break
-        if not driver_mode and (
-            frontier.filter(retryable).limit(1).count() == 0
-        ):
-            break
-        if driver_mode and round_no == start_round:
-            # one initial job only; thereafter the metric counts decide.
-            # A FULL count (the frontier is a localCheckpoint — counting
-            # it is metadata-cheap) instead of the old limit(1) emptiness
-            # probe: the exact figure seeds pending_hint, so an
-            # under-budget round 0 skips its provably-identity politeness
-            # windows exactly like the metric-hinted later rounds do.
-            n_start = frontier.filter(retryable).count()
-            if n_start == 0:
-                break
-            if cfg.extra.get("round0_hint", True):
-                pending_hint = n_start
-        if cfg.use_bloom and bloom is None:
-            # resume only: one full build from the committed seen table —
-            # thereafter updated incrementally from round deltas
-            if cfg.filter_kind == "cuckoo":
-                from ..operators import cuckoo as ckf
-
-                shards_df = ckf.build_cuckoo_shards(
-                    seen, cfg.bloom_shards, max(cfg.bloom_bits_per_shard // 64, 1024)
-                )
-            else:
-                shards_df = seen_ops.build_bloom_shards(
-                    seen, cfg.bloom_shards, cfg.bloom_bits_per_shard
-                )
-            bloom = seen_ops.shards_to_dict(shards_df)
+        if bloom is None:
+            bloom = seen_ops.shards_to_dict(seen_ops.build_bloom_shards(
+                seen, cfg.bloom_shards, cfg.bloom_bits_per_shard
+            ))
         out = run_round(
             spark, round_no, frontier, seen, robots_rules,
-            web_pages, robots_src, cfg, bloom,
-            scratch=scratch if cfg.extra.get("fetched_parquet", True) else None,
-            pending_hint=pending_hint,
-        )
-        pending_hint = None  # recomputed from this round's metrics below
-        # no round probes the shard map after the last possible one
-        bloom_used_again = (
-            cfg.use_bloom and bloom is not None and round_no + 1 < cfg.max_rounds
+            web_pages, robots_src, cfg, bloom, scratch, pending_hint=pending,
         )
         out["documents"] = out["documents"].coalesce(n_buckets)
-        if store is not None:
-            # durable commits write the full seen state (an Iceberg state
-            # table); the bucketing keeps files/partitions bounded
-            out["frontier"] = out["frontier"].repartition(n_buckets, "url_hash")
-            out["robots"] = out["robots"].coalesce(1)  # ≤ one row per host
-            out["metrics"] = out["metrics"].coalesce(n_buckets)
-            out["seen"] = out["seen"].repartition(n_buckets, "url_hash")
-            store.commit_round(
-                round_no,
-                {
-                    "frontier": (out["frontier"], "state"),
-                    "seen": (out["seen"], "state"),
-                    "robots": (out["robots"], "state"),
-                    "documents": (out["documents"], "append"),
-                    "metrics": (out["metrics"], "append"),
-                },
-                extras={"config": {"budget": cfg.politeness_budget,
-                                   "max_depth": cfg.max_depth,
-                                   "salt_buckets": cfg.salt_buckets}},
-            )
-            frontier = store.read("frontier")
-            seen = store.read("seen")
-            robots_rules = store.read("robots")
-        else:
-            # no store: materialize via localCheckpoint to cut lineage
-            # growth.  DISK_ONLY keeps round history (esp. documents with
-            # full html) OFF the driver heap — deserialized in-memory
-            # checkpoints accumulate across rounds and trigger GC storms;
-            # "disk" is spark.local.dir (tmpfs-if-roomy here, local SSD on
-            # a real cluster), so reads stay fast.
-            #
-            # The driver round loop is the crawl's serial (Amdahl) fraction
-            # — every Spark ACTION costs planning + per-stage scheduling
-            # latency that no executor count amortizes.  So the round's
-            # four state products (frontier, seen delta, metrics, robots
-            # delta) materialize in ONE union-tagged checkpoint (schemas
-            # padded with nulls via allowMissingColumns) and split back out
-            # as narrow filters OVER the checkpoint; the tiny metrics +
-            # robots rows then come back in ONE collect.  2 jobs/round
-            # instead of 5.
-            from pyspark.storagelevel import StorageLevel
-
-            import time as _time
-
-            _phase_log = cfg.extra.get("phase_log")
-            _pt = _time.perf_counter()
-
-            def _phase(name: str, t0: float) -> float:
-                now = _time.perf_counter()
-                if _phase_log is not None:
-                    _phase_log.append((round_no, name, now - t0))
-                return now
-
-            _ck = {"eager": True, "storageLevel": StorageLevel.DISK_ONLY}
-            tagged = (
-                out["frontier"]
-                .withColumn("_tbl", F.lit("frontier"))
-                .unionByName(
-                    out["seen_delta"].withColumn("_tbl", F.lit("seen")),
-                    allowMissingColumns=True,
-                )
-                .unionByName(
-                    out["metrics"].withColumn("_tbl", F.lit("metrics")),
-                    allowMissingColumns=True,
-                )
-                .unionByName(
-                    out["robots_delta"].withColumn("_tbl", F.lit("robots")),
-                    allowMissingColumns=True,
-                )
-            )
-            _pt = _phase("state_plan_build", _pt)
-            state_ck = tagged.repartition(n_buckets, "url_hash").localCheckpoint(
-                **_ck
-            )
-            _pt = _phase("state_checkpoint", _pt)
-            frontier = state_ck.filter(F.col("_tbl") == "frontier").select(
-                [f.name for f in FRONTIER_SCHEMA.fields]
-            )
-            seen_delta_ck = state_ck.filter(F.col("_tbl") == "seen").select(
-                "url_hash", "url"
-            )
-            # ONE Arrow-backed collect returns the tiny metrics + robots
-            # rows plus (bounded) this round's seen-delta keys for the
-            # Bloom update.  Two corruption/safety rules, both learned the
-            # hard way (ADVICE r2):
-            # - the keys ride as STRINGS: the union-tagged frame has null
-            #   url_hash on metrics/robots rows, and Arrow's null-int64 →
-            #   float64 pandas conversion silently rounds away the low
-            #   bits of xxhash64 keys (53-bit mantissa) — the Bloom map
-            #   would then track the WRONG keys and re-linked URLs would
-            #   be re-crawled.  Decimal strings round-trip exactly.
-            # - the slice is LIMIT-bounded to bloom_delta_collect_max+1:
-            #   a breadth-explosion round can never pull an oversized
-            #   delta through the driver; hitting the bound falls back to
-            #   the distributed shard build below.
-            base = state_ck.filter(
-                F.col("_tbl").isin(["metrics", "robots"])
-            ).select(
-                "_tbl", "node_type", "event", "task_id", "url", "count",
-                "partition_id", "round", "host", "rules_txt",
-                F.lit(None).cast("string").alias("url_hash_str"),
-            )
-            collect_keys = bloom_used_again and cfg.filter_kind != "cuckoo"
-            if collect_keys:
-                keys_slice = (
-                    state_ck.filter(F.col("_tbl") == "seen")
-                    .select(
-                        F.col("url_hash").cast("string").alias("url_hash_str")
-                    )
-                    .limit(cfg.bloom_delta_collect_max + 1)
-                    .withColumn("_tbl", F.lit("seen"))
-                )
-                base = base.unionByName(keys_slice, allowMissingColumns=True)
-            _pt = _phase("collect_plan_build", _pt)
-            small_pdf = base.toPandas()
-            _pt = _phase("collect_small", _pt)
-            m = small_pdf[small_pdf["_tbl"] == "metrics"]
-            round_rows = [
-                (nt, ev, tid, url, int(cnt), int(pid), int(rnd))
-                for nt, ev, tid, url, cnt, pid, rnd in zip(
-                    m["node_type"], m["event"], m["task_id"], m["url"],
-                    m["count"], m["partition_id"], m["round"],
-                )
-            ]
-            rb = small_pdf[small_pdf["_tbl"] == "robots"]
-            robots_delta_rows = list(
-                zip(rb["host"].tolist(), rb["rules_txt"].tolist())
-            )
-            # seen grows append-only: the round DELTA is a narrow slice of
-            # the state checkpoint and the full set stays a lazy union of
-            # those slices — never rewrites crawl history.  Compact
-            # periodically so partition count stays bounded on long crawls.
-            seen = seen.unionByName(seen_delta_ck)
-            if (round_no + 1) % 8 == 0:
-                seen = seen.repartition(n_buckets, "url_hash").localCheckpoint(**_ck)
-            # documents is a narrow select over the round's fetched
-            # checkpoint (run_round materializes fetch+parse eagerly) —
-            # no second serialization pass needed
-            documents = documents.unionByName(out["documents"])
-            # robots rules: one small row per distinct host ever seen —
-            # driver-side while the host count is bounded (gate joins a
-            # local relation, no checkpoint job); beyond
-            # cfg.robots_driver_max hosts the rules stay a DataFrame of
-            # checkpointed deltas (10^7 hosts × KB rules never transit the
-            # driver)
-            if robots_driver is not None:
-                robots_driver.extend(
-                    robots_delta_rows
-                )
-                robots_rules = (
-                    spark.createDataFrame(
-                        robots_driver, "host string, rules_txt string"
-                    )
-                    if robots_driver
-                    else _empty(spark, "host string, rules_txt string")
-                )
-                if len(robots_driver) > cfg.robots_driver_max:
-                    # seed the DataFrame path with the accumulated rules,
-                    # then stop routing rules through the driver
-                    robots_rules = robots_rules.localCheckpoint(**_ck)
-                    robots_driver = None
-            else:
-                robots_rules = robots_rules.unionByName(
-                    state_ck.filter(F.col("_tbl") == "robots").select(
-                        "host", "rules_txt"
-                    )
-                )
-                if (round_no + 1) % 8 == 0:
-                    robots_rules = robots_rules.coalesce(1).localCheckpoint(**_ck)
-            metric_rows.extend(round_rows)
-            pending_known_empty = not any(
-                event in _RETRYABLE_EVENTS and count > 0
-                for (_, event, _, _, count, _, _) in round_rows
-            )
-            # exact retryable count entering the NEXT round: deferred +
-            # retryable timeouts + newly enqueued URLs (every other row is
-            # settled).  Lets run_round skip provably-identity windowing.
-            pending_hint = sum(
+        # metric rows and Bloom keys are collected only when another round
+        # can follow: no round probes the shard map after the last one
+        more = round_no + 1 < cfg.max_rounds
+        state, t = sink(round_no, out, seen, robots_rules, more, time.perf_counter())
+        frontier, seen, robots_rules = state.frontier, state.seen, state.robots
+        if more:
+            pending = sum(
                 count
-                for (_, event, _, _, count, _, _) in round_rows
+                for (_, event, _, _, count, _, _) in state.metric_rows
                 if event in _RETRYABLE_EVENTS
             )
-            if bloom_used_again:
-                if collect_keys:
-                    key_strs = small_pdf.loc[
-                        small_pdf["_tbl"] == "seen", "url_hash_str"
-                    ]
-                    if len(key_strs) <= cfg.bloom_delta_collect_max:
-                        # full delta came back (under the bound): exact
-                        # int64 keys via C-speed decimal-string parse
-                        import numpy as _np
-
-                        seen_key_rows = key_strs.to_numpy().astype(_np.int64)
-                        bloom = seen_ops.bloom_insert_driver(
-                            bloom, seen_key_rows,
-                            cfg.bloom_shards, cfg.bloom_bits_per_shard,
-                        )
-                    else:
-                        # bound hit ⇒ delta too big to transit the driver:
-                        # distributed shard build + OR-merge
-                        bloom = _update_bloom(
-                            bloom, seen_delta_ck,
-                            cfg.bloom_delta_collect_max + 1, cfg,
-                            seen_full=seen,
-                        )
-                else:
-                    n_delta = sum(
-                        count
-                        for (_, event, _, _, count, _, _) in round_rows
-                        if event in ("new_urls_found", "urls_scheduled")
-                    )
-                    bloom = _update_bloom(
-                        bloom, seen_delta_ck, n_delta, cfg, seen_full=seen
-                    )
-            _phase("driver_bookkeeping", _pt)
-        if store is not None and bloom_used_again:
-            # store path: delta size unknown until counted — count() on the
-            # committed delta is a metadata-cheap job
-            delta_df = out["seen_delta"]
-            n_delta = delta_df.count()
-            bloom = _update_bloom(bloom, delta_df, n_delta, cfg, seen_full=seen)
-        for df in out.get("_persisted", []):
+            if pending:
+                bloom = _update_bloom(bloom, state.keys, state.seen_delta, cfg)
+        _phase(cfg, round_no, "driver_bookkeeping", t)
+        for df in out["_persisted"]:
             df.unpersist()
-
-    # last-write-wins document surface (reference ES upsert keyed by URL,
-    # indexer_node.py:145-156): the round log is append-only; the returned
-    # `documents` collapses re-crawled URLs to their newest version.  With
-    # the in-run seen-set this is the identity — it matters on resume-
-    # after-reset / forced-refresh crawls where a URL re-enters the
-    # frontier.  One key-partitioned window, no global ordering.
-    from ..operators.dedup import keep_latest
-
-    if store is not None:
-        return {
-            "frontier": store.read("frontier"),
-            "seen": store.read("seen"),
-            "documents": keep_latest(
-                store.read("documents"), ["canonical_url"], "round",
-                tiebreak_col="doc_id",
-            ),
-            "metrics": store.read("metrics"),
-            "robots": store.read("robots"),
-        }
-    if metric_rows:
-        metrics = spark.createDataFrame(metric_rows, METRICS_SCHEMA)
-    return {
-        "frontier": frontier,
-        "seen": seen,
-        "documents": keep_latest(
-            documents, ["canonical_url"], "round", tiebreak_col="doc_id"
-        ),
-        "metrics": metrics,
-        "robots": robots_rules,
-    }
+    return sink.result(frontier, seen, robots_rules)
 
 
 __all__ = [

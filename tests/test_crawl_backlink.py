@@ -18,6 +18,9 @@ from distributed_web_crawling_and_indexing_system_gcp_spark.plans.crawl import (
     CrawlConfig,
     run_crawl,
 )
+from distributed_web_crawling_and_indexing_system_gcp_spark.sources.snapshots import (
+    SnapshotStore,
+)
 from tests.oracle import crawl_oracle
 
 
@@ -140,30 +143,35 @@ def test_backlink_seen_set_matches_oracle(engine_result, backlink_fixture):
     assert engine_order == sorted(oracle.fetch_order)
 
 
-def test_oversized_delta_falls_back_to_distributed_bloom(
-    spark, backlink_fixture, engine_result
-):
-    """With bloom_delta_collect_max below every round's delta, the fused
-    collect hits its LIMIT bound and the Bloom update must take the
-    distributed build+merge path — results identical to the driver-insert
-    path."""
-    cfg = CrawlConfig(
-        max_depth=CFG.max_depth,
-        politeness_budget=CFG.politeness_budget,
-        salt_buckets=CFG.salt_buckets,
-        max_attempts=CFG.max_attempts,
-        bloom_shards=CFG.bloom_shards,
-        bloom_bits_per_shard=CFG.bloom_bits_per_shard,
-        max_rounds=CFG.max_rounds,
-        bloom_delta_collect_max=1,
+def _crawl_past_collect_bound(spark, backlink_fixture, monkeypatch, store):
+    """Crawl with bloom_delta_collect_max below every round's delta: the
+    bounded key collect hits its LIMIT, and the Bloom update must take the
+    distributed build+merge path.  Returns the result and the number of
+    distributed shard builds."""
+    from distributed_web_crawling_and_indexing_system_gcp_spark.operators import (
+        seen as seen_ops,
     )
+
+    build, builds = seen_ops.build_bloom_shards, []
+
+    def spy_build(*args, **kwargs):
+        builds.append(args)
+        return build(*args, **kwargs)
+
+    monkeypatch.setattr(seen_ops, "build_bloom_shards", spy_build)
+    cfg = CrawlConfig(**{**CFG.__dict__, "bloom_delta_collect_max": 1})
     res = run_crawl(
         spark,
         backlink_fixture["seed_jobs"],
         backlink_fixture["web_pages"],
         backlink_fixture["robots_src"],
         cfg,
+        store=store,
     )
+    return res, len(builds)
+
+
+def _assert_same_crawl(res, engine_result):
     def key(r):
         return sorted(
             (x["canonical_url"], x["status"], x["depth"], x["round_processed"])
@@ -173,6 +181,31 @@ def test_oversized_delta_falls_back_to_distributed_bloom(
     assert {r["url"] for r in res["seen"].collect()} == {
         r["url"] for r in engine_result["seen"].collect()
     }
+
+
+def test_oversized_delta_falls_back_to_distributed_bloom(
+    spark, backlink_fixture, engine_result, monkeypatch
+):
+    """Driver mode: past the collect bound the Bloom update builds shards
+    distributedly — results identical to the driver-insert path."""
+    res, n_builds = _crawl_past_collect_bound(
+        spark, backlink_fixture, monkeypatch, store=None
+    )
+    assert n_builds >= 1
+    _assert_same_crawl(res, engine_result)
+
+
+def test_oversized_delta_falls_back_to_distributed_bloom_with_store(
+    spark, backlink_fixture, engine_result, monkeypatch, tmp_path
+):
+    """The store sink takes the same bounded collect and the same
+    fallback."""
+    store = SnapshotStore(str(tmp_path), spark)
+    res, n_builds = _crawl_past_collect_bound(
+        spark, backlink_fixture, monkeypatch, store=store
+    )
+    assert n_builds >= 1
+    _assert_same_crawl(res, engine_result)
 
 
 def test_production_fetch_stage_parity(spark, backlink_fixture):

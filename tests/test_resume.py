@@ -76,6 +76,25 @@ def test_resume_bit_identical(spark, web_fixture, tmp_path_factory):
     assert _tables_signature(resumed) == _tables_signature(full)
 
 
+def test_store_mode_matches_driver_mode(spark, web_fixture, tmp_path):
+    """The store sink and the in-driver checkpoint sink run the same round
+    loop: same final tables, same number of rounds (counted from the
+    phase log: a round of final timeout retries emits no metric row)."""
+    store = SnapshotStore(str(tmp_path), spark)
+
+    def crawl(**kw):
+        log = []
+        cfg = CrawlConfig(**{**CFG.__dict__, "extra": {"phase_log": log}})
+        out = run_crawl(spark, web_fixture["seed_jobs"], web_fixture["web_pages"],
+                        web_fixture["robots_src"], cfg, **kw)
+        return _tables_signature(out), len({r for r, _, _ in log})
+
+    stored, n_stored = crawl(store=store)
+    driven, n_driven = crawl()
+    assert stored == driven
+    assert n_stored == store.current_round() + 1 == n_driven
+
+
 def test_fresh_crawl_builds_no_bloom_shards_resume_does(
     spark, web_fixture, tmp_path, monkeypatch
 ):

@@ -4,13 +4,11 @@ directly against urllib (SURVEY.md §5.1)."""
 
 from __future__ import annotations
 
-from urllib.parse import urljoin, urlparse
-
 import pytest
 from pyspark.sql import functions as F
 
 from distributed_web_crawling_and_indexing_system_gcp_spark.functions import urls as U
-from tests.oracle import normalize
+from tests.oracle import clean, normalize, urljoin, urlparse
 
 TRICKY = [
     "http://Example.COM/Path/To/Page",
@@ -112,11 +110,10 @@ def test_is_valid_http(spark, url, valid):
     assert df.filter(U.is_valid_http(F.col("url"))).count() == (1 if valid else 0)
 
 
-def test_resolve_expr_matches_udf(spark):
-    """resolve_and_parse_expr's Catalyst fast path must agree with the
-    exact urllib UDF on every field for an adversarial href corpus —
-    any divergent case must be routed to the UDF by the guard, never
-    answered differently."""
+def test_resolve_and_parse_udf_matches_oracle(spark):
+    """The fused link-resolution UDF the crawl runs must agree on every
+    field with the pure-Python oracle (clean → urljoin → urlparse →
+    normalize) over an adversarial href corpus."""
     bases = [
         "http://h0.test/p/0",
         "https://h3.test/a/b/",
@@ -167,15 +164,14 @@ def test_resolve_expr_matches_udf(spark):
     df = spark.createDataFrame(rows, "base_url string, href string")
     got = df.select(
         "base_url", "href",
-        U.resolve_and_parse_expr(F.col("base_url"), F.col("href")).alias("e"),
         U.resolve_and_parse_udf(F.col("base_url"), F.col("href")).alias("u"),
     ).collect()
     assert len(got) == len(rows)
     for r in got:
-        for field in ("scheme", "netloc", "canonical"):
-            assert (r["e"][field] == r["u"][field]) or (
-                r["e"][field] is None and r["u"][field] is None
-            ), (r["base_url"], r["href"], field, r["e"], r["u"])
-        # new_url must match whenever the fast path answered (non-null e)
-        if r["e"]["new_url"] is not None and r["u"]["new_url"] is not None:
-            assert r["e"]["new_url"] == r["u"]["new_url"], (r["href"], r["e"], r["u"])
+        if r["href"] is None:
+            want = (None, None, None, None)
+        else:
+            new_url = urljoin(r["base_url"], clean(r["href"]))
+            p = urlparse(new_url)
+            want = (new_url, p.scheme, p.netloc, normalize(new_url))
+        assert tuple(r["u"]) == want, (r["base_url"], r["href"])
