@@ -36,10 +36,10 @@ pending-row count per round and the (MB-sized) Bloom shard map.
 
 from __future__ import annotations
 
+import functools
 import itertools
 import time
 from dataclasses import dataclass, field
-from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -105,11 +105,6 @@ class CrawlConfig:
     # or_shards path runs instead (a breadth-y round at 10^10-URL scale
     # can add billions of keys — collecting those would OOM the driver)
     bloom_delta_collect_max: int = 2_000_000
-    # distinct-host count up to which robots rules accumulate in a driver
-    # list (re-broadcast each round); above it the rules stay a
-    # checkpointed DataFrame (10^7+ hosts × multi-KB rules_txt would
-    # otherwise be rebuilt and re-serialized from the driver every round)
-    robots_driver_max: int = 100_000
     extra: dict = field(default_factory=dict)
 
 
@@ -273,7 +268,8 @@ def run_round(
     scratch: str,
     pending_hint: int | None = None,
 ) -> dict[str, DataFrame]:
-    """Execute one crawl round; returns the post-round tables (lazy DFs).
+    """Execute one crawl round; returns the round's tables (lazy DFs): the
+    next frontier, the seen and robots deltas, documents and metrics.
 
     ``pending_hint``: exact count of retryable frontier rows entering this
     round, when the caller knows it (run_crawl derives it from last
@@ -552,7 +548,6 @@ def run_round(
     seen_delta = batch_adds.unionByName(
         new_frontier.select("url_hash", F.col("canonical_url").alias("url"))
     )
-    seen_final = seen.unionByName(seen_delta)
 
     # -- frontier state update ----------------------------------------------
     def finish(df: DataFrame, status: str, bump_attempts: bool = False) -> DataFrame:
@@ -677,9 +672,7 @@ def run_round(
     _phase(cfg, round_no, "plan_build_postfetch", _t)
     return {
         "frontier": frontier_after,
-        "seen": seen_final,
         "seen_delta": seen_delta,
-        "robots": robots_after,
         "robots_delta": fetched_rules,
         "documents": documents,
         "metrics": metrics,
@@ -687,34 +680,33 @@ def run_round(
     }
 
 
-class _Round(NamedTuple):
-    """What a sink hands the round loop: next round's state tables, the
-    round's metric rows and its seen-delta key slice (both None when no
-    round can follow) and the seen delta itself (the Bloom fallback's
-    input)."""
+# the round state: four logical tables in ONE `_tbl`-tagged union —
+# tag: (run_round output, store table kind).  seen and robots are the
+# round's deltas: both modes hold the full sets as unions of delta slices
+_ROUND_STATE = {
+    "frontier": ("frontier", "state"),
+    "seen": ("seen_delta", "append"),
+    "metrics": ("metrics", "append"),
+    "robots": ("robots_delta", "append"),
+}
 
-    frontier: DataFrame
-    seen: DataFrame
-    robots: DataFrame
-    metric_rows: list | None
-    keys: object | None  # pandas Series of decimal-string url_hash keys
-    seen_delta: DataFrame
+_RETRYABLE_EVENTS = {"urls_deferred", "url_timeout_retryable", "new_urls_found"}
+
+# DISK_ONLY keeps round history OFF the driver heap — deserialized
+# in-memory checkpoints accumulate across rounds and trigger GC storms;
+# "disk" is spark.local.dir (tmpfs-if-roomy here, local SSD on a real
+# cluster), so reads stay fast
+_CK = {"eager": True, "storageLevel": StorageLevel.DISK_ONLY}
 
 
 def _collect_small(
-    small: DataFrame,
-    seen_delta: DataFrame,
-    cfg: CrawlConfig,
-    round_no: int,
-    with_keys: bool,
-    t: float,
+    metrics: DataFrame, seen_delta: DataFrame, cfg: CrawlConfig, round_no: int, t: float
 ):
-    """ONE Arrow-backed collect of a round's tiny ``_tbl``-tagged rows
-    (metrics, plus robots in driver mode) and, with ``with_keys``, of the
-    round's seen-delta keys for the Bloom update.
+    """ONE Arrow-backed collect of a round's metric counts and its
+    seen-delta keys for the Bloom update.
 
     Two corruption/safety rules, both learned the hard way (ADVICE r2):
-    - the keys ride as STRINGS: the other rows carry a null key, and
+    - the keys ride as STRINGS: the metric rows carry a null key, and
       Arrow's null-int64 → float64 pandas conversion silently rounds away
       the low bits of xxhash64 keys (53-bit mantissa) — the Bloom map would
       then track the WRONG keys and re-linked URLs would be re-crawled.
@@ -724,174 +716,22 @@ def _collect_small(
       the driver; hitting the bound makes ``_update_bloom`` fall back to
       the distributed shard build.
 
-    Returns ``(pandas frame, metric rows, key strings or None, now)``.
+    Returns ``(pending count, key strings, now)``; the pending count is
+    the sum of the round's ``_RETRYABLE_EVENTS`` counts (see run_crawl).
     """
-    if with_keys:
-        keys_slice = (
-            seen_delta.select(F.col("url_hash").cast("string").alias("url_hash_str"))
-            .limit(cfg.bloom_delta_collect_max + 1)
-            .withColumn("_tbl", F.lit("seen"))
-        )
-        small = small.unionByName(keys_slice, allowMissingColumns=True)
+    keys_slice = (
+        seen_delta.select(F.col("url_hash").cast("string").alias("url_hash_str"))
+        .limit(cfg.bloom_delta_collect_max + 1)
+        .withColumn("_tbl", F.lit("seen"))
+    )
+    small = metrics.select("event", "count", F.lit("metrics").alias("_tbl")).unionByName(
+        keys_slice, allowMissingColumns=True
+    )
     t = _phase(cfg, round_no, "collect_plan_build", t)
     pdf = small.toPandas()
     t = _phase(cfg, round_no, "collect_small", t)
-    m = pdf[pdf["_tbl"] == "metrics"]
-    rows = [
-        (nt, ev, tid, url, int(cnt), int(pid), int(rnd))
-        for nt, ev, tid, url, cnt, pid, rnd in zip(
-            m["node_type"], m["event"], m["task_id"], m["url"],
-            m["count"], m["partition_id"], m["round"],
-        )
-    ]
-    keys = pdf.loc[pdf["_tbl"] == "seen", "url_hash_str"] if with_keys else None
-    return pdf, rows, keys, t
-
-
-class _DriverSink:
-    """No store: materialize each round via localCheckpoint to cut lineage
-    growth.  DISK_ONLY keeps round history (esp. documents with full html)
-    OFF the driver heap — deserialized in-memory checkpoints accumulate
-    across rounds and trigger GC storms; "disk" is spark.local.dir
-    (tmpfs-if-roomy here, local SSD on a real cluster), so reads stay fast.
-
-    The driver round loop is the crawl's serial (Amdahl) fraction — every
-    Spark ACTION costs planning + per-stage scheduling latency that no
-    executor count amortizes.  So the round's four state products
-    (frontier, seen delta, metrics, robots delta) materialize in ONE
-    union-tagged checkpoint (schemas padded with nulls via
-    allowMissingColumns) and split back out as narrow filters OVER the
-    checkpoint; the tiny metrics + robots rows (+ the Bloom keys) then come
-    back in ONE collect.  2 jobs/round instead of 5.
-    """
-
-    _CK = {"eager": True, "storageLevel": StorageLevel.DISK_ONLY}
-
-    def __init__(self, spark: SparkSession, cfg: CrawlConfig, n_buckets: int):
-        self.spark, self.cfg, self.n_buckets = spark, cfg, n_buckets
-        self.documents = _empty(spark, DOCUMENTS_SCHEMA)
-        self.metric_rows: list = []
-        # robots rules: one small row per distinct host ever seen —
-        # driver-side while the host count is bounded (gate joins a local
-        # relation, no checkpoint job); beyond cfg.robots_driver_max hosts
-        # the rules stay a DataFrame of checkpointed deltas (10^7 hosts × KB
-        # rules never transit the driver)
-        self.robots_driver: list | None = []
-
-    def __call__(self, round_no, out, seen, robots_rules, more, t) -> tuple:
-        cfg, n_buckets = self.cfg, self.n_buckets
-        tagged = out["frontier"].withColumn("_tbl", F.lit("frontier"))
-        for tbl, key in (("seen", "seen_delta"), ("metrics", "metrics"),
-                         ("robots", "robots_delta")):
-            tagged = tagged.unionByName(
-                out[key].withColumn("_tbl", F.lit(tbl)), allowMissingColumns=True
-            )
-        t = _phase(cfg, round_no, "state_plan_build", t)
-        state_ck = tagged.repartition(n_buckets, "url_hash").localCheckpoint(**self._CK)
-        t = _phase(cfg, round_no, "state_checkpoint", t)
-        frontier = state_ck.filter(F.col("_tbl") == "frontier").select(
-            [f.name for f in FRONTIER_SCHEMA.fields]
-        )
-        seen_delta = state_ck.filter(F.col("_tbl") == "seen").select("url_hash", "url")
-        small = state_ck.filter(F.col("_tbl").isin(["metrics", "robots"])).select(
-            "_tbl", "node_type", "event", "task_id", "url", "count",
-            "partition_id", "round", "host", "rules_txt",
-        )
-        pdf, rows, keys, t = _collect_small(small, seen_delta, cfg, round_no, more, t)
-        self.metric_rows.extend(rows)
-        # seen grows append-only: the round DELTA is a narrow slice of the
-        # state checkpoint and the full set stays a lazy union of those
-        # slices — never rewrites crawl history.  Compact periodically so
-        # partition count stays bounded on long crawls.
-        seen = seen.unionByName(seen_delta)
-        if (round_no + 1) % 8 == 0:
-            seen = seen.repartition(n_buckets, "url_hash").localCheckpoint(**self._CK)
-        # documents is a narrow select over the round's fetched parquet —
-        # no second serialization pass needed
-        self.documents = self.documents.unionByName(out["documents"])
-        if self.robots_driver is not None:
-            rb = pdf[pdf["_tbl"] == "robots"]
-            self.robots_driver.extend(zip(rb["host"].tolist(), rb["rules_txt"].tolist()))
-            robots_rules = (
-                self.spark.createDataFrame(self.robots_driver, ROBOTS_SCHEMA)
-                if self.robots_driver
-                else _empty(self.spark, ROBOTS_SCHEMA)
-            )
-            if len(self.robots_driver) > cfg.robots_driver_max:
-                # seed the DataFrame path with the accumulated rules, then
-                # stop routing rules through the driver
-                robots_rules = robots_rules.localCheckpoint(**self._CK)
-                self.robots_driver = None
-        else:
-            robots_rules = robots_rules.unionByName(
-                state_ck.filter(F.col("_tbl") == "robots").select("host", "rules_txt")
-            )
-            if (round_no + 1) % 8 == 0:
-                robots_rules = robots_rules.coalesce(1).localCheckpoint(**self._CK)
-        return _Round(frontier, seen, robots_rules, rows, keys, seen_delta), t
-
-    def result(self, frontier, seen, robots_rules) -> dict[str, DataFrame]:
-        metrics = (
-            self.spark.createDataFrame(self.metric_rows, METRICS_SCHEMA)
-            if self.metric_rows
-            else _empty(self.spark, METRICS_SCHEMA)
-        )
-        return {
-            "frontier": frontier,
-            "seen": seen,
-            "documents": _latest_documents(self.documents),
-            "metrics": metrics,
-            "robots": robots_rules,
-        }
-
-
-class _StoreSink:
-    """Each round commits atomically to a SnapshotStore and the next round
-    reads the committed state back (resume continues from it).  Durable
-    commits write the full seen state (an Iceberg state table); the
-    bucketing keeps files/partitions bounded."""
-
-    def __init__(self, store: SnapshotStore, cfg: CrawlConfig, n_buckets: int):
-        self.store, self.cfg, self.n_buckets = store, cfg, n_buckets
-
-    def __call__(self, round_no, out, seen, robots_rules, more, t) -> tuple:
-        cfg, n_buckets, store = self.cfg, self.n_buckets, self.store
-        store.commit_round(
-            round_no,
-            {
-                "frontier": (out["frontier"].repartition(n_buckets, "url_hash"), "state"),
-                "seen": (out["seen"].repartition(n_buckets, "url_hash"), "state"),
-                "robots": (out["robots"].coalesce(1), "state"),  # ≤ one row per host
-                "documents": (out["documents"], "append"),
-                "metrics": (out["metrics"].coalesce(n_buckets), "append"),
-            },
-            extras={"config": {"budget": cfg.politeness_budget,
-                               "max_depth": cfg.max_depth,
-                               "salt_buckets": cfg.salt_buckets}},
-        )
-        t = time.perf_counter()  # the commit stays outside the phase log
-        rows = keys = None
-        if more:
-            # the committed round's metric rows + the delta keys, one job
-            small = store.read("metrics").filter(F.col("round") == round_no)
-            small = small.withColumn("_tbl", F.lit("metrics"))
-            _, rows, keys, t = _collect_small(
-                small, out["seen_delta"], cfg, round_no, True, t
-            )
-        return _Round(
-            store.read("frontier"), store.read("seen"), store.read("robots"),
-            rows, keys, out["seen_delta"],
-        ), t
-
-    def result(self, *_) -> dict[str, DataFrame]:
-        store = self.store
-        return {
-            "frontier": store.read("frontier"),
-            "seen": store.read("seen"),
-            "documents": _latest_documents(store.read("documents")),
-            "metrics": store.read("metrics"),
-            "robots": store.read("robots"),
-        }
+    pending = pdf.loc[pdf["event"].isin(_RETRYABLE_EVENTS), "count"].sum()
+    return int(pending), pdf.loc[pdf["_tbl"] == "seen", "url_hash_str"], t
 
 
 def _latest_documents(documents: DataFrame) -> DataFrame:
@@ -947,9 +787,6 @@ def _scratch_dir(spark: SparkSession) -> str:
     return f"{managed}/crawl-{sc.applicationId}-{next(_RUN_SEQ)}"
 
 
-_RETRYABLE_EVENTS = {"urls_deferred", "url_timeout_retryable", "new_urls_found"}
-
-
 def run_crawl(
     spark: SparkSession,
     seed_jobs: DataFrame,
@@ -966,16 +803,21 @@ def run_crawl(
     each round commits atomically; ``resume=True`` continues from the last
     committed round (bit-identical to an uninterrupted run — verified by
     tests/test_resume.py).  Without, each round lands in one in-driver
-    checkpoint.  The two modes differ ONLY in that sink step: both hand the
-    loop the next state, the round's metric rows and its seen-delta keys,
-    so the stop rule and the Bloom update below are the same for both.
+    checkpoint.  The two modes differ ONLY in that materialize step: the
+    round state, its slices, the stop rule and the Bloom update below are
+    the same code for both.
+
+    The returned ``metrics`` is an event log, not a round log: a round
+    that only re-fetches final-attempt timeouts emits no metric row, so
+    its distinct ``round`` values can undercount the rounds run.  Count
+    rounds from ``cfg.extra["phase_log"]`` or ``store.current_round() + 1``.
     """
     if resume:
         assert store is not None and store.current_round() >= 0
         start_round = store.current_round() + 1
-        frontier = store.read("frontier")
-        seen = store.read("seen")
-        robots_rules = store.read("robots")
+        frontier, seen, robots_rules, documents, metrics = (
+            store.read(t) for t in ("frontier", "seen", "robots", "documents", "metrics")
+        )
         # built once from the committed seen table before the first round —
         # thereafter updated incrementally from round deltas
         bloom = None
@@ -989,6 +831,8 @@ def run_crawl(
         frontier = seeds_to_frontier(spark, jobs).localCheckpoint()
         seen = _empty(spark, SEEN_SCHEMA)
         robots_rules = _empty(spark, ROBOTS_SCHEMA)
+        documents = _empty(spark, DOCUMENTS_SCHEMA)
+        metrics = _empty(spark, METRICS_SCHEMA)
         # the shard map tracks `seen` key for key.  A fresh crawl's seen
         # table is empty, so its map is the empty map (no key inserted) —
         # no shard build job over a table known to hold no rows
@@ -1002,11 +846,10 @@ def run_crawl(
     # co-partitioning.  (At 10^10 scale the same normalization is the
     # Iceberg state-table write: bucket(url_hash) partitioning.)
     n_buckets = spark.sparkContext.defaultParallelism
-    sink = (
-        _DriverSink(spark, cfg, n_buckets) if store is None
-        else _StoreSink(store, cfg, n_buckets)
-    )
     scratch = _scratch_dir(spark)
+    extras = {"config": {"budget": cfg.politeness_budget,
+                         "max_depth": cfg.max_depth,
+                         "salt_buckets": cfg.salt_buckets}}
 
     # ONE exact count before the first round (the frontier is a checkpoint
     # or a committed table — counting it is metadata-cheap); thereafter the
@@ -1026,24 +869,68 @@ def run_crawl(
             spark, round_no, frontier, seen, robots_rules,
             web_pages, robots_src, cfg, bloom, scratch, pending_hint=pending,
         )
+        # documents is a narrow select over the round's fetched parquet —
+        # no second serialization pass needed; with a store it is the one
+        # table written apart from the round state (padded into the
+        # url_hash-keyed union, every document row would land in the one
+        # null-key partition)
         out["documents"] = out["documents"].coalesce(n_buckets)
+        t = time.perf_counter()
+        # Every Spark ACTION costs planning + per-stage scheduling latency
+        # that no executor count amortizes, and this loop is the crawl's
+        # serial (Amdahl) fraction.  So the round's four state products
+        # materialize as ONE union-tagged product (schemas padded with
+        # nulls) and split back out as narrow filters over it.
+        parts = {tbl: out[key] for tbl, (key, _) in _ROUND_STATE.items()}
+        state = functools.reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True),
+            (df.withColumn("_tbl", F.lit(tbl)) for tbl, df in parts.items()),
+        ).repartition(n_buckets, "url_hash")
+        t = _phase(cfg, round_no, "state_plan_build", t)
+        if store is None:
+            state = state.localCheckpoint(**_CK)
+            t = _phase(cfg, round_no, "state_checkpoint", t)
+        else:
+            # one partitioned round-state write + the documents append,
+            # then the atomic publish; the union comes back read from it
+            tags = {tbl: (kind, parts[tbl].schema)
+                    for tbl, (_, kind) in _ROUND_STATE.items()}
+            state = store.commit_round(
+                round_no, {"documents": (out["documents"], "append")},
+                extras=extras, union=(state, tags),
+            )
+            t = time.perf_counter()  # the commit stays outside the phase log
+        frontier, seen_delta, round_metrics, robots_delta = (
+            state.filter(F.col("_tbl") == tbl).select(parts[tbl].columns)
+            for tbl in _ROUND_STATE
+        )
+        # seen and robots grow append-only: the round DELTA is a narrow
+        # slice of the round state and the full set stays a lazy union of
+        # those slices — never rewrites crawl history.  Compact
+        # periodically so partition count stays bounded on long crawls.
+        seen = seen.unionByName(seen_delta)
+        robots_rules = robots_rules.unionByName(robots_delta)
+        if (round_no + 1) % 8 == 0:
+            seen = seen.repartition(n_buckets, "url_hash").localCheckpoint(**_CK)
+            robots_rules = robots_rules.coalesce(1).localCheckpoint(**_CK)
+        documents = documents.unionByName(out["documents"])
+        metrics = metrics.unionByName(round_metrics)
         # metric rows and Bloom keys are collected only when another round
         # can follow: no round probes the shard map after the last one
-        more = round_no + 1 < cfg.max_rounds
-        state, t = sink(round_no, out, seen, robots_rules, more, time.perf_counter())
-        frontier, seen, robots_rules = state.frontier, state.seen, state.robots
-        if more:
-            pending = sum(
-                count
-                for (_, event, _, _, count, _, _) in state.metric_rows
-                if event in _RETRYABLE_EVENTS
-            )
+        if round_no + 1 < cfg.max_rounds:
+            pending, keys, t = _collect_small(round_metrics, seen_delta, cfg, round_no, t)
             if pending:
-                bloom = _update_bloom(bloom, state.keys, state.seen_delta, cfg)
+                bloom = _update_bloom(bloom, keys, seen_delta, cfg)
         _phase(cfg, round_no, "driver_bookkeeping", t)
         for df in out["_persisted"]:
             df.unpersist()
-    return sink.result(frontier, seen, robots_rules)
+    return {
+        "frontier": frontier,
+        "seen": seen,
+        "documents": _latest_documents(documents),
+        "metrics": metrics,
+        "robots": robots_rules,
+    }
 
 
 __all__ = [

@@ -67,6 +67,10 @@ def test_resume_bit_identical(spark, web_fixture, tmp_path_factory):
     os.makedirs(os.path.join(part_root, "frontier", "r2"), exist_ok=True)
     with open(os.path.join(part_root, "frontier", "r2", "garbage.parquet"), "w") as f:
         f.write("partial write")
+    torn = os.path.join(part_root, "round_state", "r2", "_tbl=frontier")
+    os.makedirs(torn, exist_ok=True)
+    with open(os.path.join(torn, "garbage.parquet"), "w") as f:
+        f.write("partial write")
 
     resumed = run_crawl(
         spark, web_fixture["seed_jobs"], web_fixture["web_pages"],
@@ -93,6 +97,76 @@ def test_store_mode_matches_driver_mode(spark, web_fixture, tmp_path):
     driven, n_driven = crawl()
     assert stored == driven
     assert n_stored == store.current_round() + 1 == n_driven
+
+
+def test_resume_from_five_table_layout(spark, web_fixture, tmp_path):
+    """A store committed in the earlier layout — five tables, each its own
+    write, with seen and robots as full-state tables — still resumes: the
+    new rounds' delta paths extend the last full seen and robots paths."""
+    from pyspark.sql import functions as F
+
+    args = (spark, web_fixture["seed_jobs"], web_fixture["web_pages"],
+            web_fixture["robots_src"])
+    cut = run_crawl(*args, CrawlConfig(**{**CFG.__dict__, "max_rounds": 2}))
+    store = SnapshotStore(str(tmp_path), spark)
+    for rnd in (0, 1):
+        tables = {name: (cut[name].filter(F.col("round") == rnd), "append")
+                  for name in ("documents", "metrics")}
+        if rnd == 1:
+            tables.update({name: (cut[name], "state")
+                           for name in ("frontier", "seen", "robots")})
+        store.commit_round(rnd, tables)
+
+    resumed = run_crawl(*args, CFG, store=store, resume=True)
+    assert _tables_signature(resumed) == _tables_signature(run_crawl(*args, CFG))
+    seen_paths = store._commit_meta(store.current_round())["tables"]["seen"]["paths"]
+    assert seen_paths[0] == os.path.join("seen", "r1") and len(seen_paths) > 1
+
+
+def test_empty_tag_writes_no_path(spark, tmp_path):
+    """A round-state tag with no rows writes no leaf directory and records
+    no path: the table reads as its earlier rounds' rows, with the
+    recorded schema and no job."""
+    from pyspark.sql import functions as F
+
+    store = SnapshotStore(str(tmp_path), spark)
+    robots_schema = "host string, rules_txt string"
+    seen_schema = "url_hash long, url string"
+    kinds = {
+        "seen": ("append", spark.createDataFrame([], seen_schema).schema),
+        "robots": ("append", spark.createDataFrame([], robots_schema).schema),
+        "metrics": ("append", spark.createDataFrame([], "n long").schema),
+    }
+
+    def union(seen_rows, robots_rows):
+        seen = spark.createDataFrame(seen_rows, seen_schema)
+        robots = spark.createDataFrame(robots_rows, robots_schema)
+        return (seen.withColumn("_tbl", F.lit("seen")).unionByName(
+            robots.withColumn("_tbl", F.lit("robots")), allowMissingColumns=True
+        ), kinds)
+
+    rules = [("a.test", "User-agent: *"), ("b.test", None)]
+    store.commit_round(0, {}, union=union([(1, "http://a.test/")], rules))
+    back = store.commit_round(1, {}, union=union([(2, "http://b.test/")], []))
+    assert sorted(r["_tbl"] for r in back.collect()) == ["seen"]
+    meta = store._commit_meta(1)["tables"]
+    assert meta["robots"]["paths"] == store._commit_meta(0)["tables"]["robots"]["paths"]
+    assert len(meta["seen"]["paths"]) == 2 and meta["metrics"]["paths"] == []
+
+    sc = spark.sparkContext
+    sc.setJobGroup("read-empty-tag", "snapshot read")
+    try:
+        robots = store.read("robots")
+        never = store.read("metrics")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("read-empty-tag") == []
+    assert robots.schema.simpleString() == "struct<host:string,rules_txt:string>"
+    assert sorted(map(tuple, robots.collect())) == sorted(rules)
+    assert never.schema.simpleString() == "struct<n:bigint>" and never.count() == 0
+    assert sorted(r["url"] for r in store.read("seen").collect()) == [
+        "http://a.test/", "http://b.test/",
+    ]
 
 
 def test_fresh_crawl_builds_no_bloom_shards_resume_does(
