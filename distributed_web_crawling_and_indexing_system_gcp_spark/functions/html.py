@@ -41,6 +41,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .urls import resolve_one
+
 SPAN_SCHEMA = StructType(
     [
         StructField("kind", StringType()),
@@ -178,6 +180,54 @@ def parse_html_udf(html: pd.Series) -> pd.Series:
     return pd.Series([parse_html_one(h) for h in html], dtype="object")
 
 
+# one resolved out-link of a page, in the page's link-span order
+LINK_SCHEMA = StructType(
+    [
+        StructField("scheme", StringType()),
+        StructField("netloc", StringType()),
+        StructField("canonical", StringType()),
+    ]
+)
+
+PAGE_SCHEMA = StructType(
+    [
+        StructField("spans", PARSE_SCHEMA),
+        StructField("links", ArrayType(LINK_SCHEMA)),
+    ]
+)
+
+
+def page_one(html: str | None, base: str | None) -> tuple[list | None, list | None]:
+    """Parse one page and resolve its links against ``base``: ``(spans,
+    links)``, where ``links[i]`` is the ``(scheme, netloc, canonical)`` of
+    the i-th link span (crawler_node.py:304-366 in one callback).  A null
+    ``base`` parses without resolving (``links`` null)."""
+    spans = parse_html_one(html)
+    if spans is None or base is None:
+        return spans, None
+    links = []
+    for s in spans:
+        if s["kind"] == "link":
+            _, scheme, netloc, canonical = resolve_one(base, s["media_ref"])
+            links.append({"scheme": scheme, "netloc": netloc, "canonical": canonical})
+    return spans, links
+
+
+def page_pass(html: pd.Series, base: pd.Series) -> pd.DataFrame:
+    return pd.DataFrame(
+        [page_one(h, b) for h, b in zip(html, base)], columns=["spans", "links"]
+    )
+
+
+# The crawl's one Python pass per fetched page: parse + link resolution,
+# one Arrow round trip.  Marked nondeterministic (its output is a pure
+# function of its input) so that Catalyst evaluates it exactly where the
+# plan puts it: a deterministic projection over a union is copied into
+# every union branch (PushProjectionThroughUnion), which would add a
+# second pass over the fetch stage's all-null miss branch.
+page_pass_udf = pandas_udf(page_pass, PAGE_SCHEMA).asNondeterministic()
+
+
 def text_view(spans_col):
     """Flattened text view over a spans column — equals the reference's
     ``' '.join(soup.stripped_strings)`` (crawler_node.py:307).
@@ -203,6 +253,9 @@ __all__ = [
     "PARSE_SCHEMA",
     "parse_html_udf",
     "parse_html_one",
+    "PAGE_SCHEMA",
+    "page_one",
+    "page_pass_udf",
     "text_view",
     "links_view",
 ]

@@ -82,34 +82,27 @@ RESOLVE_PARSE_SCHEMA = StructType(
 )
 
 
+def resolve_one(base: str, href: str) -> tuple[str, str, str, str]:
+    """One link, resolved as the crawler resolves it (crawler_node.py:
+    349-366): ``(new_url, scheme, netloc, canonical)`` — ``urljoin`` of
+    the cleaned href, ``urlparse`` of the result, ``normalize_url`` of it.
+    The one implementation of link resolution: ``resolve_and_parse_udf``
+    and the crawl's page pass (functions/html.py) both call it."""
+    nu = urljoin(base, _clean_one(href))
+    p = urlparse(nu)
+    return nu, p.scheme, p.netloc, _canonicalize_one(nu)
+
+
 @pandas_udf(RESOLVE_PARSE_SCHEMA)
 def resolve_and_parse_udf(base: pd.Series, href: pd.Series) -> pd.DataFrame:
-    """Fused link-resolution stage: urljoin + urlparse + canonicalize in ONE
-    Arrow round trip (the exploded-links stream is the round's largest
-    dataset — one Python worker pass instead of four, one urlparse call
-    instead of three).  Semantics identical to resolve_link_udf +
-    scheme_udf/host_udf + canonicalize_udf (crawler_node.py:349-366)."""
-    new_urls, schemes, netlocs, canons = [], [], [], []
-    for b, h in zip(base, href):
-        if b is None or h is None:
-            new_urls.append(None); schemes.append(None)
-            netlocs.append(None); canons.append(None)
-            continue
-        nu = urljoin(b, _clean_one(h))
-        p = urlparse(nu)
-        cleaned = _clean_one(nu)
-        cp = urlparse(cleaned)
-        canonical = f"{cp.scheme}://{cp.netloc}{cp.path}"
-        if cp.query:
-            canonical += f"?{cp.query}"
-        new_urls.append(nu)
-        schemes.append(p.scheme)
-        netlocs.append(p.netloc)
-        canons.append(canonical.lower().rstrip("/"))
-    return pd.DataFrame(
-        {"new_url": new_urls, "scheme": schemes, "netloc": netlocs,
-         "canonical": canons}
-    )
+    """Fused link resolution: urljoin + urlparse + canonicalize in ONE
+    Arrow round trip per (base, href) row.  Semantics identical to
+    resolve_link_udf + scheme_udf/host_udf + canonicalize_udf."""
+    rows = [
+        (None, None, None, None) if b is None or h is None else resolve_one(b, h)
+        for b, h in zip(base, href)
+    ]
+    return pd.DataFrame(rows, columns=list(RESOLVE_PARSE_SCHEMA.names))
 
 
 @pandas_udf(StringType())
@@ -174,6 +167,7 @@ __all__ = [
     "scheme_udf",
     "resolve_link_udf",
     "resolve_and_parse_udf",
+    "resolve_one",
     "robots_url_udf",
     "clean_col",
     "canonicalize_col",

@@ -143,7 +143,12 @@ def filter_new(
     rows of ``candidates`` whose ``url_hash`` is NOT in ``seen``.
 
     With Bloom shards: definitely-new rows bypass the join entirely;
-    only maybe-seen rows pay the exact ``left_anti``.  An empty shard map
+    only maybe-seen rows pay the exact ``left_anti``.  The probe runs once
+    per candidate and never over ``seen``: the flagged candidates are a
+    lazy local checkpoint, computed by the first action and read by both
+    halves of the split.  Unmaterialized, each half would re-run the probe,
+    and Catalyst would also copy the ``maybe_seen`` filter across the join
+    key onto the whole ``seen`` side.  An empty shard map
     means no key was ever inserted, i.e. ``shards`` stands for an empty
     ``seen``: ``candidates`` come back unchanged, with no probe and no
     join (the probe would answer "definitely new" for every row).
@@ -156,7 +161,7 @@ def filter_new(
         return candidates
     flagged = bloom_maybe_seen(
         candidates.sparkSession, candidates, shards, num_shards, bits_per_shard
-    )
+    ).localCheckpoint(eager=False)
     definitely_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
     maybe = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
     confirmed_new = maybe.join(seen.select("url_hash"), "url_hash", "left_anti")

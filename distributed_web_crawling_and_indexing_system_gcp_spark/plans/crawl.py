@@ -8,13 +8,24 @@ Pub/Sub loop (/root/reference/src/master/master_node.py:155-282 and
     pending frontier
       → per-host politeness window (budget; overflow deferred)
       → global seen-set dedup (canonical url_hash)
-      → robots gate (broadcast rules join + vectorized RobotFileParser)
+      → robots gate (broadcast rules join + vectorized RobotFileParser;
+        one verdict per batch row, persisted)
       → fetch (synthetic closed-world join; network stage stubbed)
-      → parse_html → interleaved spans → documents rows
-      → posexplode links → clean → urljoin → validity → canonicalize
-        → domain restriction (case-sensitive SUBSTRING, crawler_node.py:363)
-        → depth gate → dedup vs seen → new pending frontier rows
+        + the page pass: ONE Arrow UDF per fetched page parses the html
+        into interleaved spans and resolves each link span (clean →
+        urljoin → urlparse → canonicalize), for pages below their depth
+        limit — the round's fetch write holds spans and resolved links
+      → documents rows (Catalyst views over the spans)
+      → posexplode resolved links → validity → domain restriction
+        (case-sensitive SUBSTRING, crawler_node.py:363) → url_hash
+        → dedup vs seen (Bloom probe, then exact anti-join)
+        → new pending frontier rows
       → metrics (per-partition lineage) → atomic snapshot commit
+
+A round thus runs two Python passes, robots and the page pass, both
+inside the fetch write; after it, only a round that starts from a
+non-empty Bloom map runs one more, the probe of its link candidates
+(tests/test_crawl_plans.py).
 
 Determinism contract (what the pytest oracle mirrors exactly):
 - frontier order = (depth asc, url asc) within each host's budget window;
@@ -48,7 +59,7 @@ from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
 from ..functions import urls as U
-from ..functions.html import links_view, parse_html_udf, text_view
+from ..functions.html import page_pass_udf, text_view
 from ..operators import politeness, robots, seen as seen_ops
 from ..sources.fetch import classify_fetch, fetch_synthetic
 from ..sources.snapshots import SnapshotStore
@@ -177,14 +188,14 @@ def validate_seed_jobs(seed_jobs: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 def dedupe_seed_jobs(seed_jobs: DataFrame) -> DataFrame:
     """UI-level duplicate-job collapse: jobs with the same sorted seed-URL
-    set reuse the earliest task (UI/main.py:185-199, J5)."""
-    sig = seed_jobs.withColumn(
-        "_sig", F.array_join(F.sort_array(F.col("seed_urls")), ",")
-    )
-    first = sig.groupBy("_sig").agg(F.min("task_id").alias("task_id"))
+    set reuse the earliest task (UI/main.py:185-199, J5).  One window over
+    the set signature keeps each set's smallest ``task_id``."""
+    sig = F.array_join(F.sort_array(F.col("seed_urls")), ",")
     return (
-        sig.join(first, ["_sig", "task_id"])  # keep only the first job per sig
-        .drop("_sig")
+        seed_jobs.withColumn("_sig", sig)
+        .withColumn("_first", F.min("task_id").over(Window.partitionBy("_sig")))
+        .filter(F.col("task_id") == F.col("_first"))
+        .drop("_sig", "_first")
     )
 
 
@@ -211,45 +222,31 @@ def _phase(cfg: CrawlConfig, round_no: int, name: str, t0: float) -> float:
     return now
 
 
-def _extract_links(ok_html: DataFrame, cfg: CrawlConfig) -> DataFrame:
-    """ok_html: fetched rows + parsed column; returns candidate child rows
-    (pre seen-dedup).  Columns: canonical child url/host/hash + lineage +
-    dedup-ordering keys (_depth,_parent,_pos)."""
-    eff_limit = F.coalesce(F.col("depth_limit"), F.lit(cfg.max_depth))
-    expandable = ok_html.filter(F.col("depth") < eff_limit)
-
-    links = expandable.select(
+def _extract_links(ok_html: DataFrame) -> DataFrame:
+    """ok_html: fetched rows with the page pass's ``links`` column (null for
+    pages at their depth limit); returns candidate child rows (pre
+    seen-dedup).  Columns: canonical child url/hash + lineage + dedup-
+    ordering keys (child_depth, parent_canonical, link_pos).  Pure
+    Catalyst: the links were resolved in the fetch stage."""
+    links = ok_html.select(
         F.col("canonical_url").alias("parent_canonical"),
         F.col("task_id"),
         F.col("depth"),
         F.col("depth_limit"),
         F.col("domain_restriction"),
-        F.coalesce(F.col("final_url"), F.col("url")).alias("base_url"),
-        F.posexplode(links_view(F.col("spans"))).alias("link_pos", "href"),
+        F.posexplode(F.col("links")).alias("link_pos", "_l"),
     )
-    # ONE fused Arrow pass: urljoin + urlparse + canonicalize.  A guarded
-    # pure-Catalyst route for simple absolute links was built and measured
-    # 15-25 % SLOWER end-to-end in interleaved A/Bs — the Python resolve
-    # of the link stream is cheap and pipelined, while the guard/struct
-    # expressions multiply across this projection's many consumers —
-    # so it was deleted and the fused UDF is the only route.
-    resolved = links.withColumn(
-        "_rp", U.resolve_and_parse_udf(F.col("base_url"), F.col("href"))
-    )
-    parsed = resolved.select(
-        "*",
-        F.col("_rp.scheme").alias("scheme"),
-        F.col("_rp.netloc").alias("netloc"),
-        F.col("_rp.canonical").alias("canonical_url"),
-    ).filter(U.is_schemed_http(F.col("scheme"), F.col("netloc")))
+    netloc = F.col("_l.netloc")
     # substring (NOT suffix) domain restriction, case-sensitive on the
     # non-normalized netloc (crawler_node.py:363)
-    restricted = parsed.filter(
-        F.col("domain_restriction").isNull()
-        | F.col("netloc").contains(F.col("domain_restriction"))
+    valid = links.filter(
+        U.is_schemed_http(F.col("_l.scheme"), netloc)
+        & (F.col("domain_restriction").isNull()
+           | netloc.contains(F.col("domain_restriction")))
     )
     return (
-        restricted.drop("_rp")
+        valid.withColumn("canonical_url", F.col("_l.canonical"))
+        .drop("_l")
         .withColumn("url_hash", F.xxhash64(F.col("canonical_url")))
         .withColumn("child_depth", F.col("depth") + F.lit(1))
     )
@@ -347,9 +344,9 @@ def run_round(
     new_batch = new_batch.filter(F.col("_rn") == 1).drop("_rn")
     skipped_seen = skipped_seen.unionByName(batch_dups)
 
-    # new_batch feeds the robots gate, the seen update, metrics, AND the
-    # skipped_seen anti-join — persist so the window+anti-join subtree
-    # runs once per round, not once per consumer
+    # new_batch feeds the robots gate and the robots fetch list, the seen
+    # update, metrics, AND the extraction anti-join — persist so the
+    # window+anti-join subtree runs once per round, not once per consumer
     new_batch = new_batch.persist()
 
     # seen grows by every selected-for-processing canonical — BEFORE the
@@ -370,19 +367,19 @@ def run_round(
     # `need` is anti-joined against robots_rules ⇒ disjoint; plain union
     robots_after = robots_rules.unionByName(fetched_rules)
 
-    gated = robots.gate_on_robots(to_fetch, robots_after)
+    # ONE robots verdict per batch row: persisted, so the fetch stage's hit
+    # and miss branches, the skipped_robots frontier rows and the
+    # url_skipped metric all read the verdict the UDF computed once
+    gated = robots.gate_on_robots(to_fetch, robots_after).persist()
     blocked = gated.filter(~F.col("robots_allowed")).drop("robots_allowed")
     allowed = gated.filter(F.col("robots_allowed")).drop("robots_allowed")
 
-    # -- fetch (closed world) + parse, materialized ONCE --------------------
-    # fetched rows fan out to documents, link extraction, metrics and four
-    # frontier-status branches.  ONE eager DISK_ONLY checkpoint holds the
-    # round's fetch results + parsed spans: the fetch join runs once, the
-    # parse UDF runs once, and the heavy (html, spans) columns serialize
-    # once, off-heap.  (A deserialized in-memory persist of span-struct
-    # arrays bloats ~10× and gets evicted under load — the re-parse that
-    # follows was measured at >600 core-s per round at bench scale.)
-    # Non-HTML/error rows carry html=null ⇒ parse yields null spans.
+    # -- fetch + the page pass, materialized ONCE ---------------------------
+    # fetched rows fan out to documents, link extraction, metrics and the
+    # frontier-status branches.  ONE parquet write holds the round's fetch
+    # results, parsed spans and resolved links: the fetch join runs once,
+    # the round's one Python pass per page runs once, and everything after
+    # the write is Catalyst over its columns.
     # fetch route: the closed-world fixture join (tests/bench — no Python
     # in the path) or, when cfg.extra["fetcher"] injects a request
     # callable, the REAL production stage — grouped applyInPandas per
@@ -402,35 +399,38 @@ def run_round(
         ).drop("host_salt")
     else:
         raw_fetched = fetch_synthetic(allowed, web_pages)
-    # parse a MASKED column: only ok_html bodies of EXPANDABLE rows reach
-    # the HTML parser in the hot fetch stage —
-    # - non-HTML 2xx bodies (PDFs etc.) would burn parser time for
-    #   nothing with a production fetcher;
-    # - pages already AT their depth limit never feed link extraction
-    #   (guide §1.2: don't compute what you throw away — at max_depth=1
-    #   that is HALF the fetched pages), so their spans are derived
-    #   lazily by the documents sink below, only if a caller
-    #   materializes documents.
-    _parse_mask = (F.col("fetch_outcome") == "ok_html") & (
-        F.col("depth") < F.coalesce(F.col("depth_limit"), F.lit(cfg.max_depth))
-    )
-    fetched_lazy = classify_fetch(raw_fetched).withColumn(
-        "spans", parse_html_udf(F.when(_parse_mask, F.col("html")))
+    # the page pass (functions/html.py) parses every ok_html body — the
+    # documents sink reads those spans — and resolves links only for pages
+    # below their depth limit: a page AT its limit never feeds link
+    # extraction (at max_depth=1 that is half the fetched pages), so its
+    # base URL is masked to null.  Non-HTML 2xx bodies (PDFs etc. with a
+    # production fetcher) and error rows reach it as null html.
+    ok = F.col("fetch_outcome") == "ok_html"
+    expandable = F.col("depth") < F.coalesce(F.col("depth_limit"), F.lit(cfg.max_depth))
+    fetched_lazy = (
+        classify_fetch(raw_fetched)
+        .withColumn("_page", page_pass_udf(
+            F.when(ok, F.col("html")),
+            F.when(ok & expandable, F.coalesce(F.col("final_url"), F.col("url"))),
+        ))
+        .withColumn("spans", F.col("_page.spans"))
+        .withColumn("links", F.col("_page.links"))
+        .drop("_page")
     )
     _t = _phase(cfg, round_no, "plan_build_prefetch", _t)
     # NARROW round state (VERDICT r5 #2 / guide §8: "make every shuffle
     # but the last operate on a lightweight proxy"): with the closed-world
     # synthetic fetcher the raw ``html`` bodies are deterministically
     # re-derivable from ``web_pages`` by request URL, so the round-state
-    # parquet — which every post-parse consumer reads — omits the heaviest
+    # parquet — which every post-fetch consumer reads — omits the heaviest
     # column entirely; ``documents`` re-attaches html with one lazy join
     # that only executes if a caller materializes the documents sink.
     # With an injected production fetcher bodies are NOT refetchable and
     # stay inline.
     drop_html = cfg.extra.get("fetcher") is None
-    # columnar round state: the six status branches + metrics prune to the
+    # columnar round state: the status branches + metrics prune to the
     # narrow frontier columns; only documents/link extraction read the
-    # heavy spans column chunks.  Read back with the known schema:
+    # heavy spans/links column chunks.  Read back with the known schema:
     # inferring it from the footers is one more job per round
     path = f"{scratch}/fetched_r{round_no:05d}"
     state_out = fetched_lazy.drop("html") if drop_html else fetched_lazy
@@ -445,90 +445,43 @@ def run_round(
         # re-attach bodies from the closed-world fixture: the fetch join
         # keyed html by the exact request url, so this reproduces the
         # dropped column bit-for-bit (left join — every ok_html row came
-        # from a fixture hit by construction)
+        # from a fixture hit by construction; fixture urls are unique,
+        # see fetch_synthetic)
         doc_src = ok_html.join(
             web_pages.select("url", "html"), "url", "left"
         )
-    # spans for at-depth-limit pages were skipped in the fetch stage (see
-    # _parse_mask): derive them here, lazily, from the (re-attached) html
-    # — parse_html_udf is deterministic, so the lazy spans are identical
-    # to eagerly-parsed ones (pinned by test_span_sequence_equality, which
-    # covers documents at the depth limit).  The two-step projection keeps
-    # the parse UDF evaluated once per row (spans + text both read the
-    # projected column).
-    doc_src = doc_src.withColumn(
-        "_spans_full",
-        F.coalesce(
-            F.col("spans"),
-            parse_html_udf(
-                F.when(F.col("spans").isNull(), F.col("html"))
-            ),
-        ),
-    )
     documents = doc_src.select(
         F.coalesce(F.col("final_url"), F.col("url")).alias("doc_id"),
         F.col("canonical_url"),
         F.col("task_id"),
         F.col("depth"),
         F.lit(round_no).alias("round"),
-        F.col("_spans_full").alias("spans"),
-        text_view(F.col("_spans_full")).alias("text"),
+        F.col("spans"),
+        text_view(F.col("spans")).alias("text"),
         F.col("html"),
     )
 
     # -- link extraction → new frontier rows --------------------------------
     # enqueue-time global dedup: Bloom "definitely new" fast path + exact
-    # anti-join confirm against the full enqueued-seen set (F2/F3 at scale)
-    candidates = _extract_links(ok_html, cfg)
-    # persist is LOAD-BEARING for scaling (same family as `fresh` below):
-    # filter_new splits into definitely-new ∪ (maybe ⋈ anti seen) — TWO
-    # union branches over this subtree.  Unpersisted, each branch re-runs
-    # the round's heaviest chain (fetched-parquet html decompress → span
-    # link explode → fused resolve/canonicalize Arrow UDF) from the scan
-    # up; event-log task accounting at 120k pages showed both warm-up
-    # stages reading the full fetched parquet (27.5k rows/task each —
-    # the chain executed twice per round).  The exploded-candidate rows
-    # are NARROW (urls + lineage keys, no html/spans), so caching them is
-    # cheap relative to one extra decompress+explode+UDF pass.
-    candidates = candidates.persist()
-    # the shard map was built from round-start `seen`, so run the Bloom
+    # anti-join confirm against the full enqueued-seen set (F2/F3 at scale).
+    # The shard map was built from round-start `seen`, so run the Bloom
     # fast path against that set, then an exact anti-join against this
     # round's (small) batch additions which the shards don't cover yet
     fresh = seen_ops.filter_new(
-        candidates, seen, bloom, cfg.bloom_shards, cfg.bloom_bits_per_shard
+        _extract_links(ok_html), seen, bloom, cfg.bloom_shards, cfg.bloom_bits_per_shard
     ).join(new_batch.select("url_hash"), "url_hash", "left_anti")
     dedup_w = Window.partitionBy("url_hash").orderBy(
         "child_depth", "parent_canonical", "link_pos"
     )
-    # persist is LOAD-BEARING for scaling: fresh (link explode →
-    # canonicalize UDF → Bloom → dedup window, the round's most expensive
-    # chain) fans out to new_frontier, seen_delta AND the metrics branch
-    # of the state union.  Column pruning specializes each branch's copy
-    # of the subtree, so exchange reuse does NOT dedupe them — without a
-    # cache the chain executes once per AQE leaf stage (measured 3.3×
-    # JVM-CPU inflation at local[8] vs local[2] on the 20k fixture).
+    # not persisted: `fresh` feeds the frontier, seen and metrics slices of
+    # the round state, but its chain is a parquet scan, an explode and
+    # Catalyst filters and windows — no Python — and a cache, with the
+    # warm-up count that filled it, measured no faster (CHANGES.md)
     fresh = (
         fresh.withColumn("_rn", F.row_number().over(dedup_w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
-    ).persist()
-    # Cache-chain warm-up: one linear count that populates the
-    # windowed→new_batch→fresh persisted subtrees in dependency order
-    # before the multi-branch round materialization, so concurrent AQE
-    # leaf stages read the cache instead of racing to recompute it.
-    # Historically keyed on parallelism ≥ 16 (before `fresh` was
-    # persisted the count was thrown away and only paid off when the
-    # local[32] stage race bit).  With `fresh` persisted the warm-up
-    # wins at every level (20k-page A/B, fresh JVMs: local[2] 102 s vs
-    # 115 s, local[8] 60 s vs 79 s — and the unpersisted r4 baseline was
-    # 170/90 s).  The warm-up JOB (not the persist) is skipped on
-    # provably-small retry rounds: when the batch fits under the per-host
-    # budget the chain a racing consumer would recompute is tiny, and the
-    # saved job submission (~2-3 s) is pure serial-fraction reduction.
-    if pending_hint is None or pending_hint > cfg.politeness_budget:
-        _t = _phase(cfg, round_no, "plan_build_mid", _t)
-        fresh.count()
-        _t = _phase(cfg, round_no, "warmup_count", _t)
+    )
     new_frontier = fresh.select(
         F.col("canonical_url").alias("url"),  # children enqueue normalized
         F.col("canonical_url"),
@@ -676,7 +629,7 @@ def run_round(
         "robots_delta": fetched_rules,
         "documents": documents,
         "metrics": metrics,
-        "_persisted": [windowed, new_batch, candidates, fresh],
+        "_persisted": [windowed, new_batch, gated],
     }
 
 

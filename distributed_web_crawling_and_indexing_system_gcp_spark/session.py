@@ -10,8 +10,10 @@ tables (robots rules, host budgets) always broadcast instead of shuffling.
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
+from pyspark.sql.udf import UserDefinedFunction
 
 
 def _scratch_dir() -> str:
@@ -46,6 +48,24 @@ def _driver_mem_default() -> str:
     except OSError:
         pass
     return "8g"
+
+
+def _drop_cached_java_udfs() -> None:
+    """A module-level UDF builds its Java UDF on first use and keeps it,
+    and that object holds the SparkContext's Python accumulator.  After
+    ``spark.stop()`` and a new session in the same process, every Python
+    task would send its accumulator update to the old context's closed
+    server, and the scheduler logs one "Failed to update accumulator"
+    stack trace per task.  So every session this factory returns starts
+    with no Java UDF cached in any of this package's modules."""
+    pkg = __name__.rsplit(".", 1)[0]
+    for name, mod in list(sys.modules.items()):
+        if mod is None or not (name == pkg or name.startswith(pkg + ".")):
+            continue
+        for obj in list(vars(mod).values()):
+            udf = getattr(obj, "_unwrapped", None)
+            if isinstance(udf, UserDefinedFunction):
+                udf._judf_placeholder = None
 
 
 def build_session(
@@ -93,4 +113,5 @@ def build_session(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
+    _drop_cached_java_udfs()
     return builder.getOrCreate()

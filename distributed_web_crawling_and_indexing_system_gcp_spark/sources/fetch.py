@@ -53,6 +53,11 @@ def fetch_synthetic(batch: DataFrame, web_pages: DataFrame, url_col: str = "url"
     hash tables — no sort, no exchange of page bodies.  (The real
     network fetcher replaces this operator entirely; this is the fixture
     path used by tests/bench.)
+
+    Closed-world precondition: ``web_pages.url`` is unique.  A URL listed
+    twice would fetch as two rows, and so would the crawl's re-attach of
+    ``html`` to the documents sink (``plans/crawl.py``), which joins the
+    same fixture by the same key.  ``webgen`` fixtures hold each URL once.
     """
     pages = web_pages.select(
         F.col("url").alias(url_col),

@@ -8,9 +8,13 @@ from pyspark.sql import functions as F
 
 from distributed_web_crawling_and_indexing_system_gcp_spark.functions.html import (
     links_view,
+    page_pass_udf,
     parse_html_one,
     parse_html_udf,
     text_view,
+)
+from distributed_web_crawling_and_indexing_system_gcp_spark.functions.urls import (
+    resolve_and_parse_udf,
 )
 
 HTML = """<html><head><title>T1</title></head><body>
@@ -133,3 +137,40 @@ def test_fast_parse_matches_htmlparser():
     # and the fixture pages all take the fast path (that's the point)
     for i in range(20):
         assert _parse_fast(webgen._html_for(i, 50, 8)) is not None
+
+
+def test_page_pass_matches_parse_and_resolve_udfs(spark):
+    """The crawl's page pass returns what the stand-alone UDFs return:
+    parse_html_udf's spans, and for a non-null base, resolve_and_parse_udf
+    of each link span in link order; a null base parses only."""
+    from distributed_web_crawling_and_indexing_system_gcp_spark.sources import webgen
+
+    pages = [HTML, "", '<a href=" //Other.test/P/ ">o</a><a href="#f">f</a>'] + [
+        webgen._html_for(i, 50, 8, richness=2) for i in range(12)
+    ]
+    rows = [(i, h, None if i % 4 == 3 else f"http://h{i}.test/p/{i}")
+            for i, h in enumerate(pages)] + [(len(pages), None, "http://h.test/")]
+    df = spark.createDataFrame(rows, "i int, html string, base string")
+    got = {
+        r["i"]: r
+        for r in df.select("i", page_pass_udf("html", "base").alias("p"))
+        .select("i", "p.spans", "p.links").collect()
+    }
+    spans = {r["i"]: r["s"] for r in df.select("i", parse_html_udf("html").alias("s")).collect()}
+    resolved = {}
+    for r in (
+        df.filter("base is not null")
+        .select("i", "base", F.posexplode(links_view(parse_html_udf("html"))).alias("pos", "href"))
+        .select("i", "pos", resolve_and_parse_udf("base", "href").alias("r"))
+        .collect()
+    ):
+        resolved.setdefault(r["i"], {})[r["pos"]] = (
+            r["r"]["scheme"], r["r"]["netloc"], r["r"]["canonical"]
+        )
+    for i, _, base in rows:
+        assert got[i]["spans"] == spans[i], i
+        if base is None or spans[i] is None:
+            assert got[i]["links"] is None, i
+        else:
+            want = [resolved.get(i, {})[p] for p in range(len(resolved.get(i, {})))]
+            assert [tuple(link) for link in got[i]["links"]] == want, i

@@ -3,9 +3,17 @@ exact anti-join, shard OR-union correctness."""
 
 from __future__ import annotations
 
+import sys
+from collections import Counter
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from distributed_web_crawling_and_indexing_system_gcp_spark.operators import seen as S
+
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+
+from tools.plan_audit import python_udf_counts, sql_plans
 
 SHARDS, BITS = 8, 1 << 14
 
@@ -39,6 +47,21 @@ def test_filter_new_equals_exact_antijoin(spark):
     exact = sorted(r["url"] for r in S.filter_new(cands, seen).collect())
     assert with_bloom == exact
     assert len(exact) == 200  # ids 400..599
+
+
+def test_filter_new_probes_each_candidate_once(spark):
+    # a non-empty map: one probe node over the candidates, none per half
+    # of the split and none over `seen`, across every execution it takes
+    seen = _seen_df(spark, 1000)
+    shards = S.shards_to_dict(S.build_bloom_shards(seen, SHARDS, BITS))
+    cands = spark.range(500, 1500).select(
+        F.xxhash64(F.concat(F.lit("u"), F.col("id"))).alias("url_hash"),
+        F.concat(F.lit("http://h.test/"), F.col("id")).alias("url"),
+    )
+    start = sql_plans(spark)[-1][0]
+    assert S.filter_new(cands, seen, shards, SHARDS, BITS).count() == 500
+    plans = [p for _, p in sql_plans(spark, start)]
+    assert python_udf_counts(*plans) == Counter(contains=1)
 
 
 def test_or_shards_union(spark):

@@ -10,6 +10,9 @@ the planning evidence that matters at 100 TB:
 - small-side joins broadcast; no CartesianProduct anywhere
 - WholeStageCodegen covers the hot expressions
 
+It also holds the helpers the crawl's plan tests use to count Python UDF
+evaluations (``python_udf_counts`` over ``sql_plans``).
+
 Usage: python tools/plan_audit.py [sf_dir] [out_md]
 """
 
@@ -17,6 +20,7 @@ from __future__ import annotations
 
 import re
 import sys
+from collections import Counter
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
@@ -31,6 +35,58 @@ def _tree_depth(line: str) -> int:
     """Operator nesting depth of one printed plan line = where the operator
     name starts after the tree-drawing prefix (spaces, ':', '+', '-')."""
     return len(line) - len(line.lstrip(" :+-"))
+
+
+# one Python evaluation node: ``ArrowEvalPython [udfs], [outputs], …`` in a
+# tree string, ``Arguments: [udfs], [outputs], …`` in a formatted explain
+_EVAL_PYTHON = re.compile(
+    r"(?:(?:Arrow|Batch)EvalPython|Arguments:) \[(.*?)\], "
+    r"\[((?:pythonUDF\d+#\d+L?(?:, )?)+)\]"
+)
+
+
+def _top_level_items(s: str) -> list[str]:
+    """Split ``a(x, y)#1, b(z)#2`` on the commas outside parentheses."""
+    items, depth, start = [], 0, 0
+    for i, ch in enumerate(s):
+        if ch == "(":
+            depth += 1
+        elif ch == ")":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            items.append(s[start:i].strip())
+            start = i + 1
+    items.append(s[start:].strip())
+    return items
+
+
+def python_udf_counts(*plans: str) -> Counter:
+    """Python UDF evaluation nodes per UDF name over one or more executed
+    plans (``ArrowEvalPython``/``BatchEvalPython``, tree or formatted
+    explain).  A node is keyed by its output attributes, so a subtree
+    printed more than once (AQE's initial and final plan, a cached relation
+    read by several consumers or several actions) counts once, while a UDF
+    the optimizer copied into two operators counts twice."""
+    nodes: dict[str, set[str]] = {}
+    for plan in plans:
+        for udfs, outs in _EVAL_PYTHON.findall(plan):
+            for udf, out in zip(_top_level_items(udfs), outs.split(", ")):
+                nodes.setdefault(udf.split("(", 1)[0], set()).add(out)
+    return Counter({name: len(outs) for name, outs in nodes.items()})
+
+
+def sql_plans(spark, after: int = -1) -> list[tuple[int, str]]:
+    """``(execution id, physical plan)`` of every SQL execution of the
+    session with an id above ``after``, in id order, from the SQL status
+    store (the final AQE plan once an execution has ended)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    out = []
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        if e.executionId() > after:
+            out.append((e.executionId(), e.physicalPlanDescription()))
+    return sorted(out)
 
 
 def audit_plan(name: str, plan: str) -> dict:
